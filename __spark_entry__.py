@@ -8,6 +8,7 @@ order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,65 +30,37 @@ def entry(spark: SparkSession) -> DataFrame:
     return spark.sql(DECLARED_QUERIES["q17_join_multiway_agg"])
 
 
+#: (module, queries fn, oracle fn) for every registry module after the
+#: declared queries. An import error propagates: a broken module must
+#: fail the registry loudly, not shrink it.
+_REGISTRY_MODULES = (
+    ("extra_queries", "extra_queries", "extra_oracle_sql"),
+    ("corpus_queries", "corpus_queries", "corpus_oracle_sql"),
+    ("pipeline_queries", "pipeline_queries", "pipeline_oracle_sql"),
+    ("analytics_queries", "analytics_queries", "analytics_oracle_sql"),
+    ("audit_queries", "audit_queries", "audit_oracle_sql"),
+)
+
+
+def _registry_modules():
+    for mod, queries_fn, oracle_fn in _REGISTRY_MODULES:
+        m = importlib.import_module(f"hive_parse_lineage_spark.{mod}")
+        yield getattr(m, queries_fn), getattr(m, oracle_fn)
+
+
 def _base_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         name: _sql_query(sql) for name, sql in DECLARED_QUERIES.items()
     }
-    try:
-        from hive_parse_lineage_spark.extra_queries import extra_queries
-        out.update(extra_queries())
-    except ImportError:
-        pass
-    try:
-        from hive_parse_lineage_spark.corpus_queries import corpus_queries
-        out.update(corpus_queries())
-    except ImportError:
-        pass
-    try:
-        from hive_parse_lineage_spark.pipeline_queries import pipeline_queries
-        out.update(pipeline_queries())
-    except ImportError:
-        pass
-    try:
-        from hive_parse_lineage_spark.analytics_queries import analytics_queries
-        out.update(analytics_queries())
-    except ImportError:
-        pass
-    try:
-        from hive_parse_lineage_spark.audit_queries import audit_queries
-        out.update(audit_queries())
-    except ImportError:
-        pass
+    for queries_fn, _ in _registry_modules():
+        out.update(queries_fn())
     return out
 
 
 def _base_oracle_sql() -> dict[str, str]:
     out = dict(DECLARED_QUERIES)
-    try:
-        from hive_parse_lineage_spark.extra_queries import extra_oracle_sql
-        out.update(extra_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from hive_parse_lineage_spark.corpus_queries import corpus_oracle_sql
-        out.update(corpus_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from hive_parse_lineage_spark.pipeline_queries import pipeline_oracle_sql
-        out.update(pipeline_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from hive_parse_lineage_spark.analytics_queries import analytics_oracle_sql
-        out.update(analytics_oracle_sql())
-    except ImportError:
-        pass
-    try:
-        from hive_parse_lineage_spark.audit_queries import audit_oracle_sql
-        out.update(audit_oracle_sql())
-    except ImportError:
-        pass
+    for _, oracle_fn in _registry_modules():
+        out.update(oracle_fn())
     return out
 
 

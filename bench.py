@@ -249,28 +249,6 @@ def _x64_proportional(spark, sf_dir: str):
                                   cutoff=int(max_id * 0.8))
 
 
-def _x149_capped(spark, sf_dir: str):
-    """x149's PRODUCTION posture for the sweep: the same oriented-edge
-    triangle census, but over hot-bucket-capped LSH edges with the
-    default xxhash64 hasher (the registry entry runs the uncapped
-    portable-hash spelling so DuckDB can replay it — same split as
-    x46/x46_capped). What the sweep must catch: triangle closure is
-    TWO chained joins over the edge list, so a superlinear edge stage
-    would compound quadratically here. The census body is the SAME
-    code as the registry entry (operators.graph.triangle_census) —
-    only the edge builder differs, so the sweep can never silently
-    measure a different census than the gate."""
-    from hive_parse_lineage_spark.operators.dedup import minhash_near_dups
-    from hive_parse_lineage_spark.operators.graph import triangle_census
-    from hive_parse_lineage_spark.sources.loader import load_tables
-
-    docs = load_tables(spark, sf_dir)["documents"]
-    edges = (minhash_near_dups(docs, threshold=0.3, n_hashes=64, bands=16,
-                               shingle_k=2, max_bucket_size=1000)
-             .select("id_a", "id_b").localCheckpoint(eager=True))
-    return triangle_census(edges)
-
-
 _PROFILE_DOC_COLS = ("doc_id", "source", "lang", "n_chars")
 
 
@@ -569,7 +547,6 @@ def lineage_bench() -> None:
         "value": round(n * len(LINEAGE_CORPUS) / dt, 1),
         "unit": "stmts/sec", "statements": len(LINEAGE_CORPUS),
         "iterations": n,
-        "json_walk": os.environ.get("HPL_JSON_WALK", "1"),
     }))
 
 

@@ -47,16 +47,9 @@ class Engine:
         from hive_parse_lineage_spark.plans.lineage import (
             check_supported_syntax, split_statements)
         df = None
-        stmts = split_statements(sql_text)
-        for i, stmt in enumerate(stmts):
+        for stmt in split_statements(sql_text):
             check_supported_syntax(stmt)
             df = self.spark.sql(stmt)
-            if i < len(stmts) - 1:
-                # non-final statements run for their effects; Spark SQL
-                # DDL/DML execute eagerly on .sql(), SELECTs are no-ops
-                # unless collected — leave intermediate SELECT results
-                # unmaterialized on purpose
-                continue
         return df
 
     # -- lineage (the reference's core capability) -----------------------

@@ -310,13 +310,12 @@ class _Walker:
     """One instance per statement; not thread-safe (plan-sized state only)."""
 
     def __init__(self, spark: SparkSession, traverse_views: bool = False):
-        self.spark = spark
         #: False (reference parity): a view is a table boundary.
         #: True: expand view bodies and trace through to base tables.
         self.traverse_views = traverse_views
-        self.jss = spark._jsparkSession
-        self.parser = self.jss.sessionState().sqlParser()
-        self.analyzer = self.jss.sessionState().analyzer()
+        state = spark._jsparkSession.sessionState()
+        self.parser = state.sqlParser()
+        self.analyzer = state.analyzer()
         self.input_tables: set[str] = set()
         self.cte_defs: dict[int, dict[int, tuple[set[str], set[str]]]] = {}
         #: per-attribute conditions sealed at query-context boundaries
@@ -324,6 +323,12 @@ class _Walker:
         #: a WHERE inside a derived table / CTE / set-op branch attaches
         #: only to columns derived from that context.
         self.attr_conds: dict[int, set[str]] = {}
+        #: the analyzed JVM plan (set by analyze) and, built from it on
+        #: first need, the exprId -> table map of its direct file scans
+        self.analyzed = None
+        self._file_scans: dict[int, str] | None = None
+        #: > 0 while a view body is being walked (traverse_views)
+        self._view_depth = 0
         self.current_db = DEFAULT_DB
         try:
             cur = spark.catalog.currentDatabase
@@ -343,11 +348,6 @@ class _Walker:
             return ".".join(parts[-2:])
         return f"{self.current_db}.{parts[0]}" if parts else name
 
-    def _table_ident(self, cat_table) -> str:
-        ident = cat_table.identifier()
-        db = _opt(ident.database())
-        return f"{db or self.current_db}.{ident.table()}"
-
     # -- analysis -------------------------------------------------------
     def parse(self, sql: str):
         return self.parser.parsePlan(sql)
@@ -366,206 +366,10 @@ class _Walker:
             resolved = True
         if not resolved:
             self.analyzer.checkAnalysis(plan)  # raises the real error
+        self.analyzed = plan
         return plan
 
-    # -- plan traversal -------------------------------------------------
-    def walk(self, plan) -> tuple[dict[int, set[str]], set[str]]:
-        """Return (exprId -> base-column set for each output attribute,
-        conditions collected in this subtree)."""
-        cls = _cls(plan)
-
-        if cls == "SubqueryAlias":
-            child = plan.children().apply(0)
-            ccls = _cls(child)
-            if ccls == "SubqueryAlias":
-                # temp-view double wrap: SubqueryAlias alias -> SubqueryAlias view
-                inner = child.children().apply(0)
-                if _cls(inner) == "View":
-                    return self._walk_view(inner)
-            if ccls == "View":
-                return self._walk_view(child)
-            mapping, conds = self.walk(child)
-            return mapping, self._seal_context(plan, conds)
-
-        if cls == "View":
-            return self._walk_view(plan)
-
-        if cls in ("LogicalRelation", "HiveTableRelation", "DataSourceV2Relation",
-                   "StreamingRelation", "StreamingRelationV2"):
-            return self._walk_relation(plan)
-
-        if cls in ("LocalRelation", "OneRowRelation", "Range"):
-            return {a.exprId().id(): set() for a in _seq(plan.output())}, set()
-
-        if cls == "Project":
-            return self._walk_named_list(plan, _seq(plan.projectList()), [])
-
-        if cls == "Aggregate":
-            return self._walk_named_list(plan, _seq(plan.aggregateExpressions()), [])
-
-        if cls == "Window":
-            mapping, conds = self.walk(plan.children().apply(0))
-            for ne in _seq(plan.windowExpressions()):
-                srcs = set()
-                for a in _seq(ne.references().toSeq()):
-                    srcs |= mapping.get(a.exprId().id(), set())
-                    self._inherit_conds(ne.exprId().id(), a.exprId().id())
-                mapping[ne.exprId().id()] = srcs
-            return mapping, conds
-
-        if cls == "Filter":
-            mapping, conds = self.walk(plan.children().apply(0))
-            conds = set(conds)
-            conds.add("WHERE:" + self._expr_sql(plan.condition()))
-            self._walk_subquery_exprs(plan.condition())
-            return mapping, conds
-
-        if cls == "LateralJoin":
-            # LATERAL derived table: only the left side is a child; the
-            # right is a LateralSubquery expression holding the
-            # (correlated) plan — walk it so lateral output columns
-            # trace to their base tables. Best-effort here (this is
-            # already the fallback walk); the JSON path raises instead.
-            mapping, conds = self.walk(plan.children().apply(0))
-            try:
-                m2, c2 = self.walk(plan.right().plan())
-                mapping.update(m2)
-                conds = conds | c2
-            except Exception:
-                pass
-            try:
-                cond = _opt(plan.condition())
-                if cond is not None:
-                    label = _JOIN_LABEL.get(plan.joinType().toString(), "JOIN")
-                    conds = set(conds)
-                    conds.add(f"{label}:{self._expr_sql(cond)}")
-            except Exception:
-                pass
-            return mapping, conds
-
-        if cls == "Join":
-            left, right = _seq(plan.children())
-            lm, lc = self.walk(left)
-            rm, rc = self.walk(right)
-            mapping = {**lm, **rm}
-            conds = lc | rc
-            cond = _opt(plan.condition())
-            label = _JOIN_LABEL.get(plan.joinType().toString(), "JOIN")
-            if cond is not None:
-                conds.add(f"{label}:{self._expr_sql(cond)}")
-            return mapping, conds
-
-        if cls in ("Union", "Intersect", "Except"):
-            # positional merge across branches, ALL sources kept
-            # (fixes ColLineParse.java:48-50 overwrite bug; LineParser.java:205-222).
-            # Each branch is its own query context: branch conditions seal
-            # onto the branch's columns and merge positionally.
-            children = _seq(plan.children())
-            walked = [self.walk(c) for c in children]
-            out = _seq(plan.output())
-            mapping: dict[int, set[str]] = {}
-            child_outputs = [_seq(c.output()) for c in children]
-            for (_, c), couts in zip(walked, child_outputs):
-                if c:
-                    for a in couts:
-                        self.attr_conds.setdefault(a.exprId().id(), set()).update(c)
-            for i, attr in enumerate(out):
-                srcs: set[str] = set()
-                for (m, _), couts in zip(walked, child_outputs):
-                    if i < len(couts):
-                        srcs |= m.get(couts[i].exprId().id(), set())
-                        self._inherit_conds(attr.exprId().id(),
-                                            couts[i].exprId().id())
-                mapping[attr.exprId().id()] = srcs
-            return mapping, set()
-
-        if cls == "Expand":
-            # CUBE/ROLLUP/GROUPING SETS: output attr i <- union of refs of the
-            # i-th expression of every projection row
-            mapping_child, conds = self.walk(plan.children().apply(0))
-            mapping: dict[int, set[str]] = {}
-            projections = [_seq(p) for p in _seq(plan.projections())]
-            for i, attr in enumerate(_seq(plan.output())):
-                srcs: set[str] = set()
-                for proj in projections:
-                    if i < len(proj):
-                        for a in _seq(proj[i].references().toSeq()):
-                            srcs |= mapping_child.get(a.exprId().id(), set())
-                            self._inherit_conds(attr.exprId().id(),
-                                                a.exprId().id())
-                mapping[attr.exprId().id()] = srcs
-            return mapping, conds
-
-        if cls == "Generate":
-            mapping, conds = self.walk(plan.children().apply(0))
-            gen_srcs: set[str] = set()
-            gen_refs = [a.exprId().id()
-                        for a in _seq(plan.generator().references().toSeq())]
-            for eid in gen_refs:
-                gen_srcs |= mapping.get(eid, set())
-            for attr in _seq(plan.generatorOutput()):
-                mapping[attr.exprId().id()] = set(gen_srcs)
-                for eid in gen_refs:
-                    self._inherit_conds(attr.exprId().id(), eid)
-            return mapping, conds
-
-        if cls == "WithCTE":
-            # children: Seq[CTERelationDef] resolved first, then the main plan
-            for d in _seq(plan.cteDefs()):
-                m, c = self.walk(d.child())
-                outs = _seq(d.child().output())
-                # the CTE body is its own query context: its conditions
-                # seal onto its columns (by position)
-                self.cte_defs[d.id()] = {
-                    i: (m.get(a.exprId().id(), set()),
-                        self.attr_conds.get(a.exprId().id(), set()) | c)
-                    for i, a in enumerate(outs)
-                }
-            return self.walk(plan.plan())
-
-        if cls == "CTERelationRef":
-            by_pos = self.cte_defs.get(plan.cteId(), {})
-            mapping = {}
-            for i, a in enumerate(_seq(plan.output())):
-                srcs, cnds = by_pos.get(i, (set(), set()))
-                mapping[a.exprId().id()] = srcs
-                if cnds:
-                    self.attr_conds.setdefault(a.exprId().id(), set()).update(cnds)
-            return mapping, set()
-
-        if cls in _PASSTHROUGH:
-            if plan.children().size() == 0:
-                return {a.exprId().id(): set() for a in _seq(plan.output())}, set()
-            return self.walk(plan.children().apply(0))
-
-        # generic fallback: merge all children, attribute outputs by exprId
-        mapping: dict[int, set[str]] = {}
-        conds = set()
-        for c in _seq(plan.children()):
-            m, cc = self.walk(c)
-            mapping.update(m)
-            conds |= cc
-        for attr in _seq(plan.output()):
-            eid = attr.exprId().id()
-            if eid not in mapping:
-                srcs: set[str] = set()
-                for a in _seq(attr.references().toSeq()):
-                    srcs |= mapping.get(a.exprId().id(), set())
-                    self._inherit_conds(eid, a.exprId().id())
-                mapping[eid] = srcs
-        return mapping, conds
-
     # -- condition scoping ----------------------------------------------
-    def _seal_context(self, plan, conds: set[str]) -> set[str]:
-        """Attach the conditions collected inside a query context to its
-        output attributes and stop their upward propagation (reference
-        pushes/pops a condition stack per query context,
-        LineParser.java:243-261)."""
-        if conds:
-            for a in _seq(plan.output()):
-                self.attr_conds.setdefault(a.exprId().id(), set()).update(conds)
-        return set()
-
     def _inherit_conds(self, eid: int, from_eid: int) -> None:
         if eid == from_eid:
             return
@@ -573,150 +377,13 @@ class _Walker:
         if inherited:
             self.attr_conds.setdefault(eid, set()).update(inherited)
 
-    # -- leaf handling --------------------------------------------------
-    def _walk_view(self, view) -> tuple[dict[int, set[str]], set[str]]:
-        """A View is a table boundary by default (the reference stops at
-        table names). With ``traverse_views`` the analyzed view body is
-        walked instead — columns trace through (recursively, so view
-        chains reach base tables) and the body is its own condition
-        context; the view name is still recorded as an input."""
-        table = self.fill_db(self._table_ident(view.desc()))
-        self.input_tables.add(table)
-        if self.traverse_views and view.children().size() > 0:
-            child = view.children().apply(0)
-            m, conds = self.walk(child)
-            couts = _seq(child.output())
-            mapping: dict[int, set[str]] = {}
-            for a, ca in zip(_seq(view.output()), couts):
-                mapping[a.exprId().id()] = m.get(ca.exprId().id(), set())
-                self._inherit_conds(a.exprId().id(), ca.exprId().id())
-            return mapping, self._seal_context(view, conds)
-        return {a.exprId().id(): {f"{table}{COLUMN_SEP}{a.name()}"}
-                for a in _seq(view.output())}, set()
-
-    def _walk_relation(self, rel) -> tuple[dict[int, set[str]], set[str]]:
-        cls = _cls(rel)
-        table = None
-        try:
-            if cls == "LogicalRelation":
-                ct = _opt(rel.catalogTable())
-                if ct is not None:
-                    table = self.fill_db(self._table_ident_from(ct.identifier()))
-            elif cls == "HiveTableRelation":
-                table = self.fill_db(self._table_ident_from(rel.tableMeta().identifier()))
-            elif cls == "DataSourceV2Relation":
-                ident = _opt(rel.identifier())
-                if ident is not None:
-                    table = self.fill_db(ident.toString())
-        except Exception:
-            table = None
-        if table is None:
-            # direct file scan: identify by location, not a catalog table
-            try:
-                loc = rel.relation().location().rootPaths().apply(0).toString()
-                table = f"{DEFAULT_DB}.{loc.rsplit('/', 1)[-1].split('.')[0]}"
-            except Exception:
-                table = f"{DEFAULT_DB}.<unknown>"
-        self.input_tables.add(table)
-        return {a.exprId().id(): {f"{table}{COLUMN_SEP}{a.name()}"}
-                for a in _seq(rel.output())}, set()
-
-    def _table_ident_from(self, ident) -> str:
-        db = _opt(ident.database())
-        return f"{db or self.current_db}.{ident.table()}"
-
-    # -- projection handling --------------------------------------------
-    def _walk_named_list(self, plan, named_exprs, extra_conds):
-        mapping_child: dict[int, set[str]] = {}
-        conds: set[str] = set(extra_conds)
-        for c in _seq(plan.children()):
-            m, cc = self.walk(c)
-            mapping_child.update(m)
-            conds |= cc
-        mapping: dict[int, set[str]] = {}
-        for ne in named_exprs:
-            srcs: set[str] = set()
-            for a in _seq(ne.references().toSeq()):
-                srcs |= mapping_child.get(a.exprId().id(), set())
-                self._inherit_conds(ne.exprId().id(), a.exprId().id())
-            srcs |= self._walk_subquery_exprs(ne)
-            mapping[ne.exprId().id()] = srcs
-        # keep child mappings visible for grouping/ordering resolution upstream
-        mapping_child.update(mapping)
-        return mapping_child, conds
-
     def _expr_sql(self, expr) -> str:
         try:
             return expr.sql()
         except Exception:
             return expr.toString()
 
-    _SUBQUERY_CLASSES = ("ScalarSubquery", "Exists", "InSubquery", "ListQuery",
-                         "LateralSubquery", "DynamicPruningSubquery")
-
-    def _walk_subquery_exprs(self, expr) -> set[str]:
-        """Walk subquery expressions nested in a condition/projection:
-        registers their input tables (reference: TOK_TABREF fires inside
-        subqueries too, LineParser.java:347-367) and returns the base
-        columns feeding the subquery's output attributes, so a
-        SELECT-list subquery contributes its inner columns as sources of
-        the enclosing expression (reference ``subQueryMap``,
-        LineParser.java:369-383,534-549). Inner conditions stay scoped
-        to the subquery (not propagated to the enclosing query)."""
-        srcs: set[str] = set()
-        try:
-            cls = _cls(expr)
-            if cls in self._SUBQUERY_CLASSES:
-                sub_mapping, _sub_conds = self.walk(expr.plan())
-                for a in _seq(expr.plan().output()):
-                    srcs |= sub_mapping.get(a.exprId().id(), set())
-            for c in _seq(expr.children()):
-                srcs |= self._walk_subquery_exprs(c)
-        except Exception:
-            pass
-        return srcs
-
-    # -- per-statement entry -------------------------------------------
-    def project_edges(self, plan, mapping: dict[int, set[str]],
-                      conds: set[str]) -> list[ColLine]:
-        """Emit one edge per output attribute of the statement root.
-
-        COLFUN tagging per LineParser.java:499-506: a projection whose
-        rendered form is not the bare column contributes a per-column
-        condition; literal-only outputs keep an empty source set
-        (notNormalCol / filterData, LineParser.java:513-525,758-761).
-        """
-        edges: list[ColLine] = []
-        named = self._root_named_exprs(plan)
-        for ne in named:
-            name = ne.name()
-            eid = ne.exprId().id()
-            srcs = sorted(mapping.get(eid, set()))
-            # root-context conditions apply to every output column;
-            # sealed subquery-context conditions only to columns derived
-            # from that context (attr_conds)
-            col_conds = set(conds) | self.attr_conds.get(eid, set())
-            if _cls(ne) == "Alias":
-                child = ne.child()
-                if _cls(child) != "AttributeReference":
-                    col_conds.add("COLFUN:" + self._expr_sql(child))
-            edges.append(ColLine(None, None, name, srcs, sorted(col_conds)))
-        return edges
-
-    def _root_named_exprs(self, plan) -> list:
-        """Find the top-most projection list (descending through
-        sort/limit/etc), else fall back to plan.output()."""
-        cls = _cls(plan)
-        if cls == "Project":
-            return _seq(plan.projectList())
-        if cls == "Aggregate":
-            return _seq(plan.aggregateExpressions())
-        if cls in _PASSTHROUGH | {"Filter", "WithCTE"} and plan.children().size() > 0:
-            child = plan.plan() if cls == "WithCTE" else plan.children().apply(0)
-            return self._root_named_exprs(child)
-        return _seq(plan.output())
-
-    # -- JSON walk (same semantics, pure Python; see module comment) ----
+    # -- JSON walk (see the section comment above _decode_flat) --------
     def walk_json(self, plan: dict) -> tuple[dict[int, set[str]], set[str]]:
         cls = plan["_cls"]
         ch = plan["_children"]
@@ -774,8 +441,8 @@ class _Walker:
             mapping, conds = self.walk_json(ch[0])
             sub = _decode_field(plan.get("right"))
             if not (isinstance(sub, dict) and sub.get("plan")):
-                # strict contract: degrade loudly to the JVM walk, not
-                # silently to lateral columns with no sources
+                # fail loudly rather than emit lateral columns with no
+                # sources
                 raise _JsonWalkError("LateralJoin without subquery plan")
             m2, c2 = self.walk_json(_decode_flat(sub["plan"]))
             mapping.update(m2)
@@ -887,12 +554,21 @@ class _Walker:
         return mapping, conds
 
     def _seal_context_json(self, plan: dict, conds: set[str]) -> set[str]:
+        """Attach the conditions collected inside a query context to its
+        output attributes and stop their upward propagation (reference
+        pushes/pops a condition stack per query context,
+        LineParser.java:243-261)."""
         if conds:
             for a in _json_output(plan):
                 self.attr_conds.setdefault(_eid(a), set()).update(conds)
         return set()
 
     def _walk_view_json(self, view: dict):
+        """A View is a table boundary by default (the reference stops at
+        table names). With ``traverse_views`` the analyzed view body is
+        walked instead — columns trace through (recursively, so view
+        chains reach base tables) and the body is its own condition
+        context; the view name is still recorded as an input."""
         ident = (view.get("desc") or {}).get("identifier") or {}
         name = ".".join(p for p in (ident.get("database"),
                                     ident.get("table")) if p)
@@ -903,6 +579,7 @@ class _Walker:
         vout = _json_output(view)
         if self.traverse_views and view["_children"]:
             child = view["_children"][0]
+            self._view_depth += 1
             try:
                 m, conds = self.walk_json(child)
             except _JsonWalkError:
@@ -910,6 +587,8 @@ class _Walker:
                 # DataFrame temp view over a bare file scan): THIS view
                 # name is the best base identity — boundary behavior.
                 m = None
+            finally:
+                self._view_depth -= 1
             if m is not None:
                 couts = _json_output(child)
                 mapping = {}
@@ -933,10 +612,11 @@ class _Walker:
             ident = rel.get("identifier")
             if isinstance(ident, str) and ident:
                 table = self.fill_db(ident)
+        if table is None and not self._view_depth:
+            table = self._file_scan_table(rel)
         if table is None:
-            # direct file scan: no catalog identity in the JSON — the
-            # location lives in a non-TreeNode relation object, so let
-            # the JVM walk (which reads rootPaths) take this statement.
+            # inside a view body this makes the view the boundary (see
+            # _walk_view_json); anywhere else it is a shape we can't name
             raise _JsonWalkError("relation without catalog identity")
         self.input_tables.add(table)
         out = _json_output(rel)
@@ -947,12 +627,36 @@ class _Walker:
                    + [a for a in _field_exprs(rel, "partitionCols")])
         if not out:
             # an empty attribute list would silently produce empty
-            # sources for every downstream column — worse than the
-            # slower JVM walk, so refuse and fall back.
+            # sources for every downstream column, so refuse instead.
             raise _JsonWalkError(f"{rel['_cls']} with no derivable output")
         rel["_out"] = out  # parents derive their output through this node
         return {_eid(a): {f"{table}{COLUMN_SEP}{a['name']}"}
                 for a in out}, set()
+
+    def _file_scan_table(self, rel: dict) -> str | None:
+        """``default.<file basename>`` for a direct file scan
+        (``SELECT ... FROM parquet.`path```). Its LogicalRelation
+        serializes ``"relation": null``, so the location is read from
+        the analyzed JVM plan instead: one pass over the leaves of the
+        plan and of every subquery plan, on first need only."""
+        if self._file_scans is None:
+            self._file_scans = {}
+            plan = self.analyzed
+            for p in [plan] + _seq(plan.subqueriesAll()):
+                for leaf in _seq(p.collectLeaves()):
+                    if (_cls(leaf) != "LogicalRelation"
+                            or leaf.catalogTable().isDefined()):
+                        continue
+                    fs = leaf.relation()
+                    if fs.getClass().getSimpleName() != "HadoopFsRelation":
+                        continue
+                    loc = fs.location().rootPaths().apply(0).toString()
+                    name = loc.rsplit("/", 1)[-1].split(".")[0]
+                    for a in _seq(leaf.output()):
+                        self._file_scans[a.exprId().id()] = \
+                            f"{DEFAULT_DB}.{name}"
+        out = _json_output(rel)
+        return self._file_scans.get(_eid(out[0])) if out else None
 
     def _walk_named_list_json(self, plan: dict, named_exprs: list[dict]):
         mapping_child: dict[int, set[str]] = {}
@@ -974,6 +678,14 @@ class _Walker:
         return mapping_child, conds
 
     def _walk_subquery_exprs_json(self, expr: dict) -> set[str]:
+        """Walk subquery expressions nested in a condition/projection:
+        registers their input tables (reference: TOK_TABREF fires inside
+        subqueries too, LineParser.java:347-367) and returns the base
+        columns feeding the subquery's output attributes, so a
+        SELECT-list subquery contributes its inner columns as sources of
+        the enclosing expression (reference ``subQueryMap``,
+        LineParser.java:369-383,534-549). Inner conditions stay scoped
+        to the subquery (not propagated to the enclosing query)."""
         srcs: set[str] = set()
         if expr["_cls"] in _JSUBQ:
             planf = expr.get("plan")
@@ -988,6 +700,16 @@ class _Walker:
 
     def project_edges_json(self, plan: dict, mapping: dict[int, set[str]],
                            conds: set[str]) -> list[ColLine]:
+        """Emit one edge per output attribute of the statement root.
+
+        COLFUN tagging per LineParser.java:499-506: a projection whose
+        rendered form is not the bare column contributes a per-column
+        condition; literal-only outputs keep an empty source set
+        (notNormalCol / filterData, LineParser.java:513-525,758-761).
+        Root-context conditions apply to every output column; sealed
+        subquery-context conditions (attr_conds) only to columns
+        derived from that context.
+        """
         edges: list[ColLine] = []
         for ne in self._root_named_exprs_json(plan):
             name = ne.get("name")
@@ -1002,6 +724,8 @@ class _Walker:
         return edges
 
     def _root_named_exprs_json(self, plan: dict) -> list[dict]:
+        """Find the top-most projection list (descending through
+        sort/limit/etc), else fall back to the plan's output."""
         cls = plan["_cls"]
         if cls == "Project":
             return _field_exprs(plan, "projectList")
@@ -1015,18 +739,18 @@ class _Walker:
 
 
 # ---------------------------------------------------------------------------
-# JSON plan walk — the throughput path.
+# JSON plan walk — the only lineage walk.
 #
-# The py4j walk above reads the analyzed tree one accessor at a time:
-# ~130 JVM round trips per statement (~0.2 ms each, GIL-serialized, so
-# threads don't help). TreeNode.toJSON returns the ENTIRE analyzed tree
-# — node classes, exprIds, expression trees, nested subquery plans — in
-# ONE round trip; these functions rebuild it and the _Walker walk_json
-# methods traverse it in pure Python. Per-statement JVM work drops to
-# parse + analyze + toJSON (+ catalog metadata for INSERTs). The py4j
-# walk stays as the fallback for any shape the JSON path can't express
-# (HPL_JSON_WALK=0 forces it; =strict raises instead of falling back,
-# which the test suite uses so regressions can't hide in the fallback).
+# TreeNode.toJSON returns the ENTIRE analyzed tree — node classes,
+# exprIds, expression trees, nested subquery plans — in ONE JVM round
+# trip (reading it accessor by accessor over py4j costs ~130 round
+# trips per statement); these functions rebuild it and the _Walker
+# walk_json methods traverse it in pure Python. Per-statement JVM work
+# is parse + analyze + toJSON (+ catalog metadata for INSERTs, and the
+# location of a direct file scan). There is no second walk to fall back
+# to: the condition text _jsql renders is the /fetch wire contract, so
+# a shape this walk cannot express raises _JsonWalkError rather than
+# switching to a renderer with different output.
 # ---------------------------------------------------------------------------
 
 def _decode_flat(flat: list) -> dict:
@@ -1263,12 +987,7 @@ def _jsql(e: dict, defs: dict | None = None) -> str:
 
 
 class _JsonWalkError(Exception):
-    """A plan shape the JSON walk can't express — JVM walk takes over."""
-
-
-def _json_walk_mode() -> str:
-    import os
-    return os.environ.get("HPL_JSON_WALK", "1")
+    """A plan shape the JSON walk can't express."""
 
 
 # ---------------------------------------------------------------------------
@@ -1572,14 +1291,9 @@ def _insert_node_lineage(spark: SparkSession, sql: str, node,
             user_cols = [str(uc.apply(i)) for i in range(uc.size())]
     except Exception:
         pass
-    by_name = False
-    try:
-        by_name = bool(node.byName())
-    except Exception:
-        pass
     return _query_lineage(spark, w, sql, query, "INSERT",
                           w.fill_db(target) if target else None,
-                          user_cols=user_cols, by_name=by_name,
+                          user_cols=user_cols, by_name=bool(node.byName()),
                           dynamic_parts=_dynamic_partitions(node))
 
 
@@ -1615,24 +1329,9 @@ def _query_lineage(spark: SparkSession, w: _Walker, sql: str, parsed_query,
     if parsed_query is None:
         return StatementLineage(sql, operation, [], set(),
                                 {target_table} if target_table else set())
-    analyzed = w.analyze(parsed_query)
-    mode = _json_walk_mode()
-    edges = None
-    if mode != "0":
-        try:
-            tree = _decode_flat(json.loads(analyzed.toJSON()))
-            mapping, conds = w.walk_json(tree)
-            edges = w.project_edges_json(tree, mapping, conds)
-        except Exception:
-            if mode == "strict":
-                raise
-            edges = None
-            w.input_tables.clear()
-            w.attr_conds.clear()
-            w.cte_defs.clear()
-    if edges is None:
-        mapping, conds = w.walk(analyzed)
-        edges = w.project_edges(analyzed, mapping, conds)
+    tree = _decode_flat(json.loads(w.analyze(parsed_query).toJSON()))
+    mapping, conds = w.walk_json(tree)
+    edges = w.project_edges_json(tree, mapping, conds)
 
     out_tables = {target_table} if target_table else set()
     if target_table:

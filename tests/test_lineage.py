@@ -529,8 +529,8 @@ def test_mixed_static_dynamic_partition_insert(spark, tables, lineage_tables):
 def test_hive_relation_json_output_derivation(spark):
     """HiveTableRelation serializes no 'output' in toJSON (it derives
     from dataCols ++ partitionCols); the JSON walk must read those
-    fields — and must REFUSE (falling back to the JVM walk) rather than
-    return silently-empty sources when no attributes are derivable."""
+    fields — and must REFUSE (raise _JsonWalkError) rather than return
+    silently-empty sources when no attributes are derivable."""
     import pytest as _pytest
     from hive_parse_lineage_spark.plans.lineage import _JsonWalkError, _Walker
 
@@ -576,28 +576,57 @@ def test_split_statements_quote_and_comment_aware():
 
 def test_lateral_join_lineage(spark, tables, lineage_tables):
     """LATERAL derived-table columns trace to their base tables (the
-    lateral plan hangs off the join's `right` expression, not a child);
-    both walk paths must agree."""
-    import os
+    lateral plan hangs off the join's `right` expression, not a child)."""
     from hive_parse_lineage_spark.plans.lineage import extract_lineage
     sql = ("SELECT c.c_custkey, o.o_orderkey FROM customer c, LATERAL ("
            "SELECT o_orderkey FROM orders WHERE o_custkey = c.c_custkey "
            "LIMIT 2) o")
-    results = {}
-    saved = os.environ.get("HPL_JSON_WALK")
+    lin = extract_lineage(spark, sql)
+    edges = [(e["target_alias"], e["sources"]) for e in lin.col_lines]
+    assert ("o_orderkey", ["default.orders.o_orderkey"]) in edges, edges
+    assert lin.input_tables >= {"default.customer", "default.orders"}
+
+
+@pytest.mark.parametrize("traverse_views", [False, True])
+def test_file_scan_lineage_matches_temp_views(spark, tables, sf_dir,
+                                              traverse_views):
+    """A direct file scan (parquet.`path`) carries no catalog identity
+    in the plan JSON; it is named default.<file basename>, so it gives
+    the same lineage as the same query over temp views built from those
+    files — including the file read inside the IN-subquery."""
+    from hive_parse_lineage_spark.plans.lineage import extract_lineage
+    tables["region"].createOrReplaceTempView("region")
+    tables["nation"].createOrReplaceTempView("nation")
+    query = ("SELECT r_name, r_regionkey FROM {r} WHERE r_regionkey IN "
+             "(SELECT n_regionkey FROM {n})")
+    files = query.format(r=f"parquet.`{sf_dir}/region.parquet`",
+                         n=f"parquet.`{sf_dir}/nation.parquet`")
+    views = query.format(r="region", n="nation")
+    got = extract_lineage(spark, files, traverse_views=traverse_views)
+    want = extract_lineage(spark, views, traverse_views=traverse_views)
+    assert got.col_lines == want.col_lines
+    assert got.input_tables == want.input_tables \
+        == {"default.region", "default.nation"}
+    assert by_alias(got)["r_name"]["sources"] == ["default.region.r_name"]
+
+
+def test_file_backed_temp_view_stays_boundary(spark, sf_dir):
+    """With traverse_views=True, a DataFrame temp view whose name
+    differs from its file is still a boundary under its own name: its
+    body bottoms out at an identity-less file scan, and the view name
+    is the better identity than the file basename."""
+    from hive_parse_lineage_spark.plans.lineage import extract_lineage
+    spark.read.parquet(f"{sf_dir}/region.parquet") \
+        .createOrReplaceTempView("region_df")
     try:
-        for mode in ("strict", "0"):
-            os.environ["HPL_JSON_WALK"] = mode
-            lin = extract_lineage(spark, sql)
-            results[mode] = [(e["target_alias"], e["sources"])
-                             for e in lin.col_lines]
-            assert ("o_orderkey", ["default.orders.o_orderkey"]) \
-                in results[mode], results[mode]
-            assert lin.input_tables >= {"default.customer", "default.orders"}
+        lin = extract_lineage(
+            spark, "SELECT r_name FROM region_df WHERE r_regionkey > 0",
+            traverse_views=True)
+        assert lin.input_tables == {"default.region_df"}
+        assert [(e["target_alias"], e["sources"]) for e in lin.col_lines] \
+            == [("r_name", ["default.region_df.r_name"])]
     finally:
-        if saved is not None:
-            os.environ["HPL_JSON_WALK"] = saved
-    assert results["strict"] == results["0"]
+        spark.catalog.dropTempView("region_df")
 
 
 def test_split_statements_backslash_escape_parity():

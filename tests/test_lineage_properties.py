@@ -88,34 +88,48 @@ def test_subquery_wrap_transparency(spark, tables, t):
 
 @st.composite
 def richer_query(draw):
+    """(sql, expected edges, expected input tables) for seven query
+    shapes. An edge is (alias, sources, condition tags); the tag is the
+    WHERE:/JOIN:/COLFUN: label, the rendered condition text is pinned
+    by the golden tests instead."""
     t1 = draw(tables_st)
     t2 = draw(tables_st.filter(lambda t: t != t1))
-    c1, c2 = SCHEMAS[t1][0], SCHEMAS[t2][0]
+    c1, c2, g = SCHEMAS[t1][0], SCHEMAS[t2][0], SCHEMAS[t1][-1]
+    a1, a2, ag = f"default.{t1}.{c1}", f"default.{t2}.{c2}", f"default.{t1}.{g}"
+    both = {f"default.{t1}", f"default.{t2}"}
     shape = draw(st.sampled_from(["join", "agg", "subquery", "union",
                                   "window", "rollup", "derived"]))
     if shape == "join":
         return (f"SELECT a.{c1} AS u, b.{c2} AS v FROM {t1} a "
-                f"JOIN {t2} b ON a.{c1} = b.{c2} WHERE a.{c1} > 0")
+                f"JOIN {t2} b ON a.{c1} = b.{c2} WHERE a.{c1} > 0",
+                [("u", [a1], ["JOIN", "WHERE"]),
+                 ("v", [a2], ["JOIN", "WHERE"])], both)
     if shape == "agg":
-        g = SCHEMAS[t1][-1]
         return (f"SELECT {g}, count(*) AS n, max({c1}) AS mx "
-                f"FROM {t1} GROUP BY {g} HAVING count(*) > 1")
+                f"FROM {t1} GROUP BY {g} HAVING count(*) > 1",
+                [(g, [ag], ["WHERE"]), ("n", [], ["COLFUN", "WHERE"]),
+                 ("mx", [a1], ["COLFUN", "WHERE"])], {f"default.{t1}"})
     if shape == "subquery":
         return (f"SELECT {c1}, (SELECT max({c2}) FROM {t2}) AS m "
-                f"FROM {t1} WHERE {c1} IN (SELECT {c2} FROM {t2})")
+                f"FROM {t1} WHERE {c1} IN (SELECT {c2} FROM {t2})",
+                [(c1, [a1], ["WHERE"]), ("m", [a2], ["COLFUN", "WHERE"])],
+                both)
     if shape == "window":
-        g = SCHEMAS[t1][-1]
         return (f"SELECT {c1}, ROW_NUMBER() OVER (PARTITION BY {g} "
-                f"ORDER BY {c1}) AS rn FROM {t1}")
+                f"ORDER BY {c1}) AS rn FROM {t1}",
+                [(c1, [a1], []), ("rn", sorted([a1, ag]), [])],
+                {f"default.{t1}"})
     if shape == "rollup":
-        g = SCHEMAS[t1][-1]
         return (f"SELECT {g}, count(*) AS n FROM {t1} "
-                f"GROUP BY ROLLUP({g})")
+                f"GROUP BY ROLLUP({g})",
+                [(g, [ag], []), ("n", [], ["COLFUN"])], {f"default.{t1}"})
     if shape == "derived":
         return (f"SELECT k + 1 AS k1 FROM "
-                f"(SELECT {c1} AS k FROM {t1} WHERE {c1} > 0) d")
+                f"(SELECT {c1} AS k FROM {t1} WHERE {c1} > 0) d",
+                [("k1", [a1], ["COLFUN", "WHERE"])], {f"default.{t1}"})
     return (f"SELECT {c1} AS k FROM {t1} UNION ALL "
-            f"SELECT {c2} AS k FROM {t2}")
+            f"SELECT {c2} AS k FROM {t2}",
+            [("k", sorted([a1, a2]), [])], both)
 
 
 # Type-class split of SCHEMAS: UNION branches must pair columns from
@@ -185,68 +199,51 @@ def nested_union_query(draw):
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(q=nested_union_query())
-def test_union_merge_survives_nesting(spark, tables, q, monkeypatch):
+def test_union_merge_survives_nesting(spark, tables, q):
     """Per output column, sources = both union branches' columns,
-    invariant under CTE/derived/star wrappers — and the JSON walk and
-    py4j walk agree on the whole result."""
+    invariant under CTE/derived/star wrappers."""
     from hive_parse_lineage_spark.plans.lineage import extract_lineage
     sql, expected, in_tables = q
-
-    def run(mode):
-        monkeypatch.setenv("HPL_JSON_WALK", mode)
-        lin = extract_lineage(spark, sql)
-        return ([(e["target_alias"], sorted(e["sources"]))
-                 for e in lin.col_lines],
-                lin.input_tables, lin.output_tables)
-
-    strict = run("strict")
-    assert strict == run("0")
-    edges, inputs, _ = strict
+    lin = extract_lineage(spark, sql)
+    edges = [(e["target_alias"], sorted(e["sources"]))
+             for e in lin.col_lines]
+    inputs = lin.input_tables
     assert inputs == in_tables
     assert [a for a, _ in edges] == ["k", "v"]
     for alias, sources in edges:
         assert set(sources) == expected[alias], (sql, alias, sources)
 
 
-def test_incompatible_union_surfaces_engine_error(spark, tables,
-                                                  monkeypatch):
+def test_incompatible_union_surfaces_engine_error(spark, tables):
     """A UNION the engine itself rejects (BIGINT vs TIMESTAMP) must
-    raise the engine's AnalysisException from lineage too — in BOTH
-    walk modes. Before the r9 fix, analyzer.execute() returned a
-    half-resolved plan and the walkers crashed downstream (JSON walk:
-    KeyError 'exprId' on an UnresolvedStar; py4j walk: opaque
-    Py4JJavaError on .output)."""
+    raise the engine's AnalysisException from lineage too. Before the
+    r9 fix, analyzer.execute() returned a half-resolved plan and the
+    walk crashed downstream (KeyError 'exprId' on an UnresolvedStar)."""
     import pytest
 
     from hive_parse_lineage_spark.plans.lineage import extract_lineage
     sql = ("SELECT * FROM (SELECT c_custkey AS k FROM customer "
            "UNION ALL SELECT o_orderdate AS k FROM orders) d")
-    for mode in ("strict", "0"):
-        monkeypatch.setenv("HPL_JSON_WALK", mode)
-        with pytest.raises(Exception, match="(?i)compatible"):
-            extract_lineage(spark, sql)
+    with pytest.raises(Exception, match="(?i)compatible"):
+        extract_lineage(spark, sql)
 
 
 @settings(max_examples=20, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(sql=richer_query())
-def test_json_walk_matches_jvm_walk(spark, tables, sql, monkeypatch):
-    """Differential invariant: the JSON walk and the py4j walk must
-    emit identical sources, aliases, table sets, and condition TAGS
-    (tag = the WHERE:/JOIN:/COLFUN: label; rendered SQL text is
-    allowed to differ between Expression.sql and the Python renderer)."""
-    import os
+@given(q=richer_query())
+def test_richer_query_shapes(spark, tables, q):
+    """Join, aggregate, subquery, union, window, rollup and derived
+    shapes each emit their expected sources, aliases, input tables and
+    condition tags."""
     from hive_parse_lineage_spark.plans.lineage import extract_lineage
-
-    def run(mode):
-        monkeypatch.setenv("HPL_JSON_WALK", mode)
-        lin = extract_lineage(spark, sql)
-        return ([(e["target_alias"], e["sources"],
-                  sorted({c.split(":", 1)[0] for c in e["conditions"]}))
-                 for e in lin.col_lines],
-                lin.input_tables, lin.output_tables)
-
-    assert run("strict") == run("0")
+    sql, expected, inputs = q
+    lin = extract_lineage(spark, sql)
+    got = [(e["target_alias"], e["sources"],
+            sorted({c.split(":", 1)[0] for c in e["conditions"]}))
+           for e in lin.col_lines]
+    assert got == expected, sql
+    assert lin.input_tables == inputs, sql
+    assert lin.output_tables == set(), sql
 
 
 # --- INSERT / CTAS over the same shape grammar (r9 verdict ask #5) ------
@@ -315,24 +312,19 @@ def write_query(draw):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(q=write_query())
 def test_insert_ctas_positional_binding(spark, tables, insert_target,
-                                        q, monkeypatch):
+                                        q):
     """Per-POSITION sources survive the INSERT/CTAS wrapper; the
     target column is the catalog's positional bind (or the user list's
     override, or the alias for CTAS); output/input table sets are
-    right; and the JSON walk and py4j walk agree on all of it."""
+    right."""
     from hive_parse_lineage_spark.plans.lineage import extract_lineage
     sql, kind, expected, inputs = q
 
-    def run(mode):
-        monkeypatch.setenv("HPL_JSON_WALK", mode)
-        st_ = extract_lineage(spark, sql).statements[0]
-        return ([(c.target_table, c.target_column, c.target_alias,
-                  sorted(c.sources)) for c in st_.col_lines],
-                st_.operation, st_.input_tables, st_.output_tables)
-
-    strict = run("strict")
-    assert strict == run("0")
-    edges, op, in_tables, out_tables = strict
+    st_ = extract_lineage(spark, sql).statements[0]
+    edges = [(c.target_table, c.target_column, c.target_alias,
+              sorted(c.sources)) for c in st_.col_lines]
+    op, in_tables, out_tables = (st_.operation, st_.input_tables,
+                                 st_.output_tables)
     assert in_tables == inputs, sql
     assert len(edges) == 2, sql
     for (tbl, tcol, alias, sources), want in zip(edges, expected):
@@ -425,23 +417,17 @@ def multi_insert_two_targets_query(draw):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(q=multi_insert_two_targets_query())
 def test_multi_insert_distinct_targets(spark, tables, insert_target,
-                                       insert_targets_2, q, monkeypatch):
+                                       insert_targets_2, q):
     """Each branch's edges carry THAT branch's target table; the
-    statement's output set is the union of both targets; both walk
-    modes agree."""
+    statement's output set is the union of both targets."""
     from hive_parse_lineage_spark.plans.lineage import extract_lineage
     sql, expected, inputs = q
 
-    def run(mode):
-        monkeypatch.setenv("HPL_JSON_WALK", mode)
-        st_ = extract_lineage(spark, sql).statements[0]
-        return ([(c.target_table, c.target_column, c.target_alias,
-                  sorted(c.sources)) for c in st_.col_lines],
-                st_.operation, st_.input_tables, st_.output_tables)
-
-    strict = run("strict")
-    assert strict == run("0")
-    edges, op, in_tables, out_tables = strict
+    st_ = extract_lineage(spark, sql).statements[0]
+    edges = [(c.target_table, c.target_column, c.target_alias,
+              sorted(c.sources)) for c in st_.col_lines]
+    op, in_tables, out_tables = (st_.operation, st_.input_tables,
+                                 st_.output_tables)
     assert op == "INSERT"
     assert in_tables == inputs, sql
     assert out_tables == {"default.pt_ins2", "default.pt_ins3"}, sql
@@ -474,23 +460,18 @@ def dynamic_partition_insert_query(draw):
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(q=dynamic_partition_insert_query())
 def test_dynamic_partition_insert_binding(spark, tables, insert_targets_2,
-                                          q, monkeypatch):
+                                          q):
     """The dynamic partition column appears as a bound target column
     (pc <- last select expr) next to the data column; output table is
-    the partitioned target; both walk modes agree."""
+    the partitioned target."""
     from hive_parse_lineage_spark.plans.lineage import extract_lineage
     sql, expected, inputs = q
 
-    def run(mode):
-        monkeypatch.setenv("HPL_JSON_WALK", mode)
-        st_ = extract_lineage(spark, sql).statements[0]
-        return ([(c.target_table, c.target_column, c.target_alias,
-                  sorted(c.sources)) for c in st_.col_lines],
-                st_.operation, st_.input_tables, st_.output_tables)
-
-    strict = run("strict")
-    assert strict == run("0")
-    edges, op, in_tables, out_tables = strict
+    st_ = extract_lineage(spark, sql).statements[0]
+    edges = [(c.target_table, c.target_column, c.target_alias,
+              sorted(c.sources)) for c in st_.col_lines]
+    op, in_tables, out_tables = (st_.operation, st_.input_tables,
+                                 st_.output_tables)
     assert op == "INSERT"
     assert in_tables == inputs, sql
     assert out_tables == {"default.pt_dyn"}, sql
@@ -503,24 +484,17 @@ def test_dynamic_partition_insert_binding(spark, tables, insert_targets_2,
 @settings(max_examples=15, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(q=multi_insert_query())
-def test_multi_insert_branch_binding(spark, tables, insert_target,
-                                     q, monkeypatch):
+def test_multi_insert_branch_binding(spark, tables, insert_target, q):
     """Each multi-insert branch binds its own select list against the
     target (positional for branch 1, user-list for branch 2); sources
-    trace to the shared FROM table; both walk modes agree."""
+    trace to the shared FROM table."""
     from hive_parse_lineage_spark.plans.lineage import extract_lineage
     sql, expected, inputs = q
 
-    def run(mode):
-        monkeypatch.setenv("HPL_JSON_WALK", mode)
-        st_ = extract_lineage(spark, sql).statements[0]
-        return ([(c.target_column, sorted(c.sources))
-                 for c in st_.col_lines],
-                st_.operation, st_.input_tables, st_.output_tables)
-
-    strict = run("strict")
-    assert strict == run("0")
-    edges, op, in_tables, out_tables = strict
+    st_ = extract_lineage(spark, sql).statements[0]
+    edges = [(c.target_column, sorted(c.sources)) for c in st_.col_lines]
+    op, in_tables, out_tables = (st_.operation, st_.input_tables,
+                                 st_.output_tables)
     assert op == "INSERT"
     assert in_tables == inputs, sql
     assert out_tables == {"default.pt_ins2"}, sql
