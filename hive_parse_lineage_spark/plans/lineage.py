@@ -36,7 +36,12 @@ sources (reference ``subQueryMap``, ``LineParser.java:369-383,534-549``).
 from __future__ import annotations
 
 import json
+import re
+import threading
+import weakref
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
@@ -245,7 +250,6 @@ def _code_only(stmt: str) -> str:
 def check_supported_syntax(stmt: str) -> None:
     """Raise the documented diagnostic for Hive-only syntax this
     engine deliberately does not implement (currently: UNIQUEJOIN)."""
-    import re
     if re.search(r"\bUNIQUEJOIN\b", _code_only(stmt), re.IGNORECASE):
         raise UniqueJoinUnsupportedError(_UNIQUEJOIN_MSG)
 
@@ -272,6 +276,32 @@ def _cls(node) -> str:
         return str(node.nodeName())
     except Exception:
         return node.getClass().getSimpleName().rstrip("$")
+
+
+class _JvmHandles(NamedTuple):
+    """py4j handles every statement uses, looked up once per session:
+    each py4j call, and each dotted name such as ``jvm.java.io``, is a
+    round trip of its own."""
+    parser: object
+    analyzer: object
+    json_mapper: object    # the json4s Jackson mapper TreeNode.toJSON uses
+    string_writer: object  # java.io.StringWriter (the class)
+
+
+_JVM_HANDLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _jvm_handles(spark: SparkSession) -> _JvmHandles:
+    handles = _JVM_HANDLES.get(spark)
+    if handles is None:
+        state = spark._jsparkSession.sessionState()
+        jvm = spark.sparkContext._jvm
+        handles = _JVM_HANDLES[spark] = _JvmHandles(
+            state.sqlParser(), state.analyzer(),
+            getattr(getattr(jvm.org.json4s.jackson, "JsonMethods$"),
+                    "MODULE$").mapper(),
+            jvm.java.io.StringWriter)
+    return handles
 
 
 # join-type labels: token text minus "TOK_" (LineParser.java:448-454)
@@ -313,9 +343,9 @@ class _Walker:
         #: False (reference parity): a view is a table boundary.
         #: True: expand view bodies and trace through to base tables.
         self.traverse_views = traverse_views
-        state = spark._jsparkSession.sessionState()
-        self.parser = state.sqlParser()
-        self.analyzer = state.analyzer()
+        jvm = _jvm_handles(spark)
+        self.parser = jvm.parser
+        self.analyzer = jvm.analyzer
         self.input_tables: set[str] = set()
         self.cte_defs: dict[int, dict[int, tuple[set[str], set[str]]]] = {}
         #: per-attribute conditions sealed at query-context boundaries
@@ -741,17 +771,58 @@ class _Walker:
 # ---------------------------------------------------------------------------
 # JSON plan walk — the only lineage walk.
 #
-# TreeNode.toJSON returns the ENTIRE analyzed tree — node classes,
-# exprIds, expression trees, nested subquery plans — in ONE JVM round
-# trip (reading it accessor by accessor over py4j costs ~130 round
-# trips per statement); these functions rebuild it and the _Walker
-# walk_json methods traverse it in pure Python. Per-statement JVM work
-# is parse + analyze + toJSON (+ catalog metadata for INSERTs, and the
-# location of a direct file scan). There is no second walk to fall back
-# to: the condition text _jsql renders is the /fetch wire contract, so
-# a shape this walk cannot express raises _JsonWalkError rather than
-# switching to a renderer with different output.
+# The ENTIRE analyzed tree — node classes, exprIds, expression trees,
+# nested subquery plans — is serialized to TreeNode's JSON on the JVM
+# and read back as text (reading it accessor by accessor over py4j costs
+# ~130 round trips per statement); these functions rebuild it and the
+# _Walker walk_json methods traverse it in pure Python. Per-statement
+# JVM work is parse + analyze + serialize (+ catalog metadata for
+# INSERTs, and the location of a direct file scan). There is no second
+# walk to fall back to: the condition text _jsql renders is the /fetch
+# wire contract, so a shape this walk cannot express raises
+# _JsonWalkError rather than switching to a renderer with different
+# output.
+#
+# The text is NOT fetched with one ``plan.toJSON()`` call. py4j's Java
+# side writes each reply through 8 KiB buffers (8,192 chars, then 8,192
+# UTF-8 bytes) on a socket without TCP_NODELAY: a reply that overflows
+# them goes out as two writes, and Nagle holds the second until the
+# Python side's delayed ACK, a flat ~44 ms per reply (8,180 ASCII chars:
+# 0.3 ms; 8,200: 44 ms). The served workload's plans are mostly
+# 9-15 kB, so a whole-text reply cost ~40 ms of a ~57 ms statement.
+# _plan_json_slices instead writes the JSON into a JVM-side StringWriter
+# with the mapper toJSON itself uses and reads it back in slices that
+# each fit in one write: the same text byte for byte, in ~7 ms
+# instead of ~42 ms on a 12 kB plan.
 # ---------------------------------------------------------------------------
+
+#: UTF-16 units per slice read back by _plan_json_slices. A unit costs
+#: at most 3 UTF-8 bytes once py4j escapes it (BMP text 3; an escaped
+#: backslash or newline 2; a surrogate pair 4 for 2 units), so a slice
+#: stays under py4j's 8,192-byte buffer whatever literals the plan holds.
+_JSON_SLICE = 2_700
+
+
+def _plan_json_slices(spark: SparkSession, plan) -> list[str]:
+    """``plan.toJSON()``'s text as slices of ≤ _JSON_SLICE UTF-16 units,
+    cut on code-point boundaries (see the section comment)."""
+    jvm = _jvm_handles(spark)
+    sw = jvm.string_writer()
+    jvm.json_mapper.writeValue(sw, plan.jsonValue())
+    buf = sw.getBuffer()
+    n = buf.length()
+    slices, a = [], 0
+    while a < n:
+        b = min(a + _JSON_SLICE, n)
+        s = buf.substring(a, b)
+        # a cut inside a surrogate pair comes back as "?": cut before it
+        if b < n and s.endswith("?") and buf.codePointAt(b - 1) > 0xFFFF:
+            b -= 1
+            s = s[:-1]
+        slices.append(s)
+        a = b
+    return slices
+
 
 def _decode_flat(flat: list) -> dict:
     """Rebuild a tree from TreeNode.toJSON's flattened pre-order list.
@@ -1329,7 +1400,8 @@ def _query_lineage(spark: SparkSession, w: _Walker, sql: str, parsed_query,
     if parsed_query is None:
         return StatementLineage(sql, operation, [], set(),
                                 {target_table} if target_table else set())
-    tree = _decode_flat(json.loads(w.analyze(parsed_query).toJSON()))
+    tree = _decode_flat(json.loads(
+        "".join(_plan_json_slices(spark, w.analyze(parsed_query)))))
     mapping, conds = w.walk_json(tree)
     edges = w.project_edges_json(tree, mapping, conds)
 
@@ -1394,6 +1466,57 @@ def _table_schema(spark: SparkSession, table: str) -> tuple[list[str], list[str]
     return [f for f in fields if f not in part_set], parts
 
 
+#: a USE keyword outside quotes and comments (conservative: a column
+#: named ``use`` only costs that script its concurrency)
+_USE = re.compile(r"\bUSE\b", re.IGNORECASE)
+
+
+class _SharedExclusiveGate:
+    """Reader/writer gate: any number of shared holders, or one
+    exclusive holder. A waiting exclusive holder blocks new shared
+    ones, so a USE script is not starved by a steady stream of others."""
+
+    def __init__(self):
+        self._cond = threading.Condition()
+        self._shared = 0
+        self._exclusive = False
+        self._waiting = 0
+
+    @contextmanager
+    def shared(self):
+        with self._cond:
+            self._cond.wait_for(
+                lambda: not (self._exclusive or self._waiting))
+            self._shared += 1
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._shared -= 1
+                if not self._shared:
+                    self._cond.notify_all()
+
+    @contextmanager
+    def exclusive(self):
+        with self._cond:
+            self._waiting += 1
+            self._cond.wait_for(
+                lambda: not (self._exclusive or self._shared))
+            self._waiting -= 1
+            self._exclusive = True
+        try:
+            yield
+        finally:
+            with self._cond:
+                self._exclusive = False
+                self._cond.notify_all()
+
+
+#: one gate per process, not per session: over-serializing USE scripts
+#: of unrelated sessions is safe, missing a shared session is not
+_SESSION_GATE = _SharedExclusiveGate()
+
+
 def extract_lineage(spark: SparkSession, sql_text: str,
                     traverse_views: bool = False) -> ScriptLineage:
     """Lineage for a (possibly multi-statement) SQL script.
@@ -1402,10 +1525,24 @@ def extract_lineage(spark: SparkSession, sql_text: str,
     ``getColLines/getInputTables/getOutputTables`` (157-162, 790-792).
     ``traverse_views`` expands view bodies so columns trace through
     view chains to base tables (the reference stops at the view name).
+
+    Safe to call from many threads on one session. The only session
+    state lineage changes is the current database (``USE``); it is
+    scoped to the script (restored on exit), and a script that may
+    contain ``USE`` runs alone while every other script runs
+    concurrently.
     """
+    stmts = split_statements(sql_text)
+    uses_db = any(_USE.search(_code_only(s)) for s in stmts)
     script = ScriptLineage()
-    for stmt in split_statements(sql_text):
-        check_supported_syntax(stmt)
-        script.statements.append(
-            _statement_lineage(spark, stmt, traverse_views))
+    with _SESSION_GATE.exclusive() if uses_db else _SESSION_GATE.shared():
+        start_db = spark.catalog.currentDatabase() if uses_db else None
+        try:
+            for stmt in stmts:
+                check_supported_syntax(stmt)
+                script.statements.append(
+                    _statement_lineage(spark, stmt, traverse_views))
+        finally:
+            if uses_db:
+                spark.catalog.setCurrentDatabase(start_db)
     return script

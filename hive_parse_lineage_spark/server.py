@@ -15,23 +15,40 @@ The reference serves ``POST /fetch`` (body = SQL text, response =
 
 Unlike the reference (which hard-codes its datasource config at
 ParseController.java:20-24), the engine is injected. Lineage is
-plan-sized work on the driver — a single SparkSession serves all
-requests; requests are serialized around the shared session by the
-handler lock (Spark's analyzer is driver-side and cheap, SURVEY §6
-target ≥50 stmts/s).
+plan-sized work on the driver (parse + analyze, no Spark jobs), so a
+single SparkSession serves all requests, and requests run concurrently
+on it, one thread each. ``extract_lineage`` is what makes that safe:
+``USE``, the only session state lineage changes, is scoped to its
+script, which runs alone.
+
+Errors: a client's bad SQL (``ParseException``, ``AnalysisException``,
+``UniqueJoinUnsupportedError``) is 400; anything else is an engine
+fault, 500 with an ``error_id`` that is also logged with its traceback.
+A body needs a Content-Length (411 without, 400 if not a non-negative
+integer) of at most ``MAX_BODY_BYTES`` (413 above).
 """
 
 from __future__ import annotations
 
 import json
-import threading
+import logging
+import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import parse_qs, urlparse
+
+from pyspark.errors import AnalysisException
+
+from hive_parse_lineage_spark.plans.lineage import UniqueJoinUnsupportedError
+
+#: largest accepted request body (a SQL script), in bytes
+MAX_BODY_BYTES = 1 << 20
+
+_log = logging.getLogger(__name__)
 
 
 def make_server(engine, host: str = "127.0.0.1", port: int = 0) -> ThreadingHTTPServer:
     """Build (not start) an HTTP server bound to ``engine``. Port 0
     picks a free port; ``server.server_address`` has the real one."""
-    lock = threading.Lock()
 
     class Handler(BaseHTTPRequestHandler):
         def _send(self, code: int, payload) -> None:
@@ -42,6 +59,31 @@ def make_server(engine, host: str = "127.0.0.1", port: int = 0) -> ThreadingHTTP
             self.end_headers()
             self.wfile.write(body)
 
+        def _body(self) -> str | None:
+            """The request body, or None once an error is sent."""
+            raw = self.headers.get("Content-Length")
+            if raw is None:
+                self._send(411, {"error": "LengthRequired"})
+                return None
+            try:
+                n = int(raw)
+            except ValueError:
+                n = -1
+            if n < 0:
+                self._send(400, {"error": "BadContentLength",
+                                 "message": f"Content-Length {raw!r}"})
+                return None
+            if n > MAX_BODY_BYTES:
+                self._send(413, {"error": "PayloadTooLarge",
+                                 "message": f"body over {MAX_BODY_BYTES} bytes"})
+                return None
+            try:
+                return self.rfile.read(n).decode("utf-8")
+            except UnicodeDecodeError as exc:
+                self._send(400, {"error": type(exc).__name__,
+                                 "message": str(exc)})
+                return None
+
         def do_GET(self):  # noqa: N802 (stdlib naming)
             if self.path == "/health":
                 self._send(200, {"status": "ok"})
@@ -49,24 +91,29 @@ def make_server(engine, host: str = "127.0.0.1", port: int = 0) -> ThreadingHTTP
                 self._send(404, {"error": f"unknown path {self.path}"})
 
         def do_POST(self):  # noqa: N802
-            n = int(self.headers.get("Content-Length", 0))
-            sql = self.rfile.read(n).decode("utf-8")
-            from urllib.parse import parse_qs, urlparse
+            sql = self._body()
+            if sql is None:
+                return
             url = urlparse(self.path)
             path, qs = url.path, parse_qs(url.query)
             try:
-                with lock:
-                    if path == "/fetch":
-                        tv = qs.get("traverse_views", ["0"])[0] in ("1", "true")
-                        self._send(200, engine.lineage(sql, traverse_views=tv))
-                    elif path == "/tables":
-                        # one parse for tables + per-statement operations
-                        # (reference Operation enum, common/Operation.java:3-5)
-                        self._send(200, engine.tables_report(sql))
-                    else:
-                        self._send(404, {"error": f"unknown path {self.path}"})
-            except Exception as exc:  # mirror reference SQLParseException → 4xx
+                if path == "/fetch":
+                    tv = qs.get("traverse_views", ["0"])[0] in ("1", "true")
+                    self._send(200, engine.lineage(sql, traverse_views=tv))
+                elif path == "/tables":
+                    # one parse for tables + per-statement operations
+                    # (reference Operation enum, common/Operation.java:3-5)
+                    self._send(200, engine.tables_report(sql))
+                else:
+                    self._send(404, {"error": f"unknown path {self.path}"})
+            # the client's bad SQL (ParseException is an AnalysisException);
+            # reference SQLParseException → 4xx
+            except (AnalysisException, UniqueJoinUnsupportedError) as exc:
                 self._send(400, {"error": type(exc).__name__, "message": str(exc)})
+            except Exception:
+                error_id = uuid.uuid4().hex[:12]
+                _log.exception("error_id=%s %s failed", error_id, path)
+                self._send(500, {"error": "InternalError", "error_id": error_id})
 
         def log_message(self, *a):  # keep test output quiet
             pass

@@ -7,6 +7,7 @@ cited per test). Catalog tables are created in a temp warehouse.
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 
 
 @pytest.fixture(scope="module")
@@ -49,7 +50,54 @@ def test_use_db_qualification(spark, lineage_tables):
         "sources": ["fact.test.id"], "conditions": [],
     }]
     assert lin.input_tables == {"fact.test"}
-    spark.sql("USE default")
+
+
+def test_use_is_scoped_to_its_script(spark, lineage_tables):
+    """USE changes the session's database for the rest of its script
+    only, also when a later statement fails."""
+    lineage(spark, "use fact; select id from test")
+    assert spark.catalog.currentDatabase() == "default"
+    with pytest.raises(AnalysisException):
+        lineage(spark, "use fact; select no_such_col from test")
+    assert spark.catalog.currentDatabase() == "default"
+
+
+def test_plan_json_slices_match_tojson(spark):
+    """The sliced plan-JSON fetch returns toJSON's text byte for byte on
+    a plan over 8 KiB whose literal holds emoji, CJK, backslashes and
+    newlines, with the first slice boundary inside a surrogate pair;
+    every slice fits py4j's 8 KiB reply buffer once escaped."""
+    from hive_parse_lineage_spark.plans.lineage import (
+        _JSON_SLICE, _plan_json_slices)
+
+    def analyzed(pad: int):
+        lit = ("a" * pad + "\U0001F600" * 2000 + "\\\n" * 1500
+               + "\u4e2d" * 2000)
+        return spark.sql("SELECT '%s' AS s" % lit.replace("\\", "\\\\")
+                         )._jdf.queryExecution().analyzed()
+
+    def utf16(s: str) -> bytes:
+        return s.encode("utf-16-le")
+
+    plan = analyzed(0)
+    text = plan.toJSON()
+    emoji_at = len(utf16(text[:text.index("\U0001F600")])) // 2
+    if (_JSON_SLICE - emoji_at) % 2 == 0:  # cut falls between two pairs
+        plan = analyzed(1)
+        text = plan.toJSON()
+    cut_unit = int.from_bytes(
+        utf16(text)[2 * _JSON_SLICE - 2:2 * _JSON_SLICE], "little")
+    assert 0xD800 <= cut_unit <= 0xDBFF  # a naive cut splits a pair
+    assert len(text.encode()) > 8192
+
+    slices = _plan_json_slices(spark, plan)
+    assert "".join(slices) == text
+    assert len(slices) > 2
+    for s in slices:
+        escaped = (s.replace("\\", "\\\\").replace("\n", "\\n")
+                   .replace("\r", "\\r"))
+        assert len(utf16(s)) // 2 <= _JSON_SLICE
+        assert len(escaped.encode()) < 8192
 
 
 # --- #5,#18,#19: the reference's own sample (LineParser.java:801-803) ---
