@@ -2081,18 +2081,21 @@ def _x171_mattr(spark, tables):
     their actual length.
 
     Scale shape: a pure per-document projection — token array, then
-    ``aggregate(sequence(...))`` folds window distinct-counts inside
-    codegen. ZERO shuffles, no joins, no window functions; work is
-    O(tokens x 50) per doc and embarrassingly parallel at any corpus
-    size."""
+    ``aggregate(sequence(...))`` folds window distinct-counts. ZERO
+    shuffles, no joins, no window functions; work is O(tokens x 50)
+    per doc and embarrassingly parallel at any corpus size. That bound
+    needs the token array bound once per row (a one-element outer
+    ``transform``): ``split(text)`` referenced inside the per-window
+    lambda would re-split the whole document for every window —
+    O(tokens²)."""
     W = 50
     toks = F.split("text", " ")
     n = F.size(toks)
-    slide = F.aggregate(
-        F.sequence(F.lit(0), n - W),
+    slide = F.transform(F.array(toks), lambda t: F.aggregate(
+        F.sequence(F.lit(0), F.size(t) - W),
         F.lit(0).cast("long"),
         lambda acc, i: acc + F.size(
-            F.array_distinct(F.slice(toks, i + 1, F.lit(W)))))
+            F.array_distinct(F.slice(t, i + 1, F.lit(W))))))[0]
     d = tables["documents"].select(
         "doc_id", n.alias("n_tokens"),
         F.when(n >= W, n - W + 1).otherwise(F.lit(1)).alias("n_windows"),

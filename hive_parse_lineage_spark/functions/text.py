@@ -174,11 +174,16 @@ def word_shingles(text: Column | str, k: int = 3) -> Column:
 
     Docs shorter than k tokens yield a single whole-doc shingle
     (``sequence(0, size-k)`` would otherwise run descending).
+
+    O(tokens·k) per document: the token array is bound once per row by
+    a one-element outer ``transform`` (the ``quantize_int8`` idiom).
+    Referencing ``split(text)`` inside the per-shingle lambda would
+    re-split the whole document for every shingle — O(tokens²).
     """
-    t = tokens(text)
-    whole = F.array(F.concat_ws(" ", t))
-    return F.when(
-        F.size(t) >= k,
-        F.transform(F.sequence(F.lit(0), F.size(t) - k),
-                    lambda i: F.concat_ws(" ", F.slice(t, i + 1, k))),
-    ).otherwise(whole)
+    return F.flatten(F.transform(
+        F.array(tokens(text)),
+        lambda t: F.when(
+            F.size(t) >= k,
+            F.transform(F.sequence(F.lit(0), F.size(t) - k),
+                        lambda i: F.concat_ws(" ", F.slice(t, i + 1, k))),
+        ).otherwise(F.array(F.concat_ws(" ", t)))))

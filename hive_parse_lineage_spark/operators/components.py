@@ -41,12 +41,16 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     max_iter: fixed round count (for oracle replay); None iterates to
         convergence with a per-round changed-label count.
     """
-    adj = (edges.select(F.col(src).alias("v"), F.col(dst).alias("u"))
-           .union(edges.select(F.col(dst).alias("v"), F.col(src).alias("u"))))
+    # Both directions in ONE pass over ``edges``: a union of the two
+    # projections would plan (and, before the checkpoint, run) the
+    # whole pair emitter twice.
+    adj = edges.select(F.inline(F.array(
+        F.struct(F.col(src).alias("v"), F.col(dst).alias("u")),
+        F.struct(F.col(dst).alias("v"), F.col(src).alias("u")))))
     if checkpoint:
         # Materialize the adjacency once: it is referenced in every
         # round, and a lazy plan would recompute the (expensive) pair
-        # emitter per round per branch.
+        # emitter per round.
         adj = adj.localCheckpoint(eager=True)
     if vertices is None:
         vertices = adj.select(F.col("v").alias("vertex")).distinct()

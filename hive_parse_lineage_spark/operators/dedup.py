@@ -9,9 +9,11 @@ Four families, all expressed as DataFrame transformations designed for
   self-join. The only shuffle is on (band, band_hash); candidate
   verification is band-local. Standard banding theory: collision
   probability ≈ 1-(1-j^r)^b for Jaccard j, r = n/b rows per band.
-  At scale the self-join's two sides shuffle on the same key from the
-  same subplan, so Spark plans a ReusedExchange: signatures are
-  computed ONCE, not per join side (plan-asserted in tests/test_plans).
+  The banded rows go through one explicit exchange on (band,
+  band_hash) that both join sides and the hot-bucket window read, so
+  Spark plans a ReusedExchange and signatures are computed ONCE, not
+  per join side — in the sort-merge shape and when AQE broadcasts the
+  join alike (plan-asserted in tests/test_plans).
 - **SimHash**: 64-bit signature; near-dup = Hamming distance ≤ k via
   pigeonhole block join (k+1 blocks: any pair within distance k agrees
   on ≥1 whole block).
@@ -19,8 +21,10 @@ Four families, all expressed as DataFrame transformations designed for
   used standalone on small data or as the verify stage after LSH.
 
 Everything is JVM-side (``transform``/``aggregate``/``xxhash64`` —
-no Python UDFs), so signatures are computed in whole-stage codegen
-during the scan.
+no Python UDFs), so signatures are computed map-side during the scan.
+The hashing and MIN registers run in whole-stage codegen; the shingle
+``Generate`` is interpreted, because higher-order functions fall back
+from codegen.
 """
 
 from __future__ import annotations
@@ -232,9 +236,13 @@ def _band_buckets(sig_df: DataFrame, id_col: str, n_hashes: int, bands: int,
             f"cast(element_at(minhash, {i * r + j + 1}) as string)"
             for j in range(r)))
         for i in range(bands)) + ")")
+    # The explicit band-key exchange is the one the join and the cap
+    # window both consume, whichever join AQE picks: a broadcast join
+    # would otherwise recompute the signatures above it per join side.
     buckets = (sig_df
                .select(id_col, "minhash", F.explode(band_entries).alias("b"))
-               .select(id_col, "minhash", "b.band", "b.band_hash"))
+               .select(id_col, "minhash", "b.band", "b.band_hash")
+               .repartition("band", "band_hash"))
     if max_bucket_size is not None:
         from pyspark.sql import Window
         n_in_bucket = F.count(F.lit(1)).over(

@@ -64,6 +64,22 @@ def test_connected_components_bounded_needs_enough_rounds(spark):
     assert four == {v: 1 for v in (1, 2, 3, 4, 5)}
 
 
+def test_connected_components_adjacency_reads_edges_once(spark):
+    """Both edge directions come from ONE pass over ``edges``, so the
+    pair emitter upstream (MinHash-LSH in x46/x59) is planned once, not
+    once per direction. The filter literal marks the edge subplan."""
+    edf = (spark.range(1, 3)
+           .select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
+           .filter(F.col("id_a") != 918273645))
+    vdf = spark.range(1, 4).select(F.col("id").alias("vertex"))
+    labels = connected_components(edf, vertices=vdf, max_iter=1,
+                                  checkpoint=False)
+    plan = labels._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("918273645") == 1, plan
+    assert ({r["vertex"]: r["component"] for r in labels.collect()}
+            == {1: 1, 2: 1, 3: 2})
+
+
 def test_dedup_survivors_keeps_min_per_cluster(spark):
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=f"t{i}") for i in range(6)])

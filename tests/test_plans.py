@@ -127,19 +127,43 @@ def test_embedding_near_dup_join_is_equi(spark, tables):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _final_plan(df) -> str:
+    """The executed plan after an action — for an adaptive plan only
+    its final plan (the adaptive node also prints the initial one)."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
 def test_minhash_self_join_reuses_exchange(spark, tables):
-    """In the at-scale shape (both sides too big to broadcast) the band
-    self-join must reuse the signature exchange — the 64-permutation
-    signature projection runs once, not once per join side."""
+    """The band self-join's two sides read ONE band-key exchange,
+    whichever join AQE picks: the signature aggregate (and the shingle
+    explode and hashing under it) runs once, not once per join side. A
+    ReusedExchange prints as one line, so each phase of the signature
+    HashAggregate — ``partial_min(`` and the final ``min(`` merge — must
+    appear exactly once in the final plan, with and without the
+    hot-bucket cap (x59 runs uncapped). Counting the merge too keeps
+    the check honest when the reused exchange is the one on doc_id
+    between the two phases."""
     from hive_parse_lineage_spark.operators.dedup import minhash_near_dups
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        df = minhash_near_dups(tables["documents"], threshold=0.3,
-                               n_hashes=16, bands=4, shingle_k=2)
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ReusedExchange" in plan
+        for threshold, join in ((old, "BroadcastHashJoin"),
+                                ("-1", "SortMergeJoin")):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            for cap in (None, 1000):
+                df = minhash_near_dups(tables["documents"], threshold=0.3,
+                                       n_hashes=16, bands=4, shingle_k=2,
+                                       max_bucket_size=cap)
+                df.collect()
+                plan = _final_plan(df)
+                assert join in plan, plan
+                assert "ReusedExchange" in plan, plan
+                aggs = [line for line in plan.splitlines()
+                        if "HashAggregate" in line and "min(pmod(" in line]
+                assert len(aggs) == 2, plan
+                assert sum("partial_min(" in line for line in aggs) == 1, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

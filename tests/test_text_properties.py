@@ -10,6 +10,7 @@ import hashlib
 import math
 
 from hypothesis import HealthCheck, given, settings, strategies as st
+from pyspark.sql import functions as F
 
 word_st = st.text(alphabet="abcdefghijklmnopqrstuvwxyz.,!0123456789",
                   min_size=1, max_size=8)
@@ -108,3 +109,36 @@ def test_hash_split_matches_python_and_partitions(spark, ids, salt):
         b = _py_hash(f"{salt}{r['doc_id']}") % 100
         assert r["bucket"] == b
         assert r["split"] == ("train" if b < 80 else "val" if b < 90 else "test")
+
+
+def _word_shingles_resplit(text: str, k: int):
+    """The earlier spelling of ``word_shingles``: ``split(text)`` is
+    referenced inside the per-shingle lambda, so every shingle re-splits
+    the document. Kept here as the reference the rewrite must equal."""
+    t = F.split(F.col(text), " ")
+    return F.when(
+        F.size(t) >= k,
+        F.transform(F.sequence(F.lit(0), F.size(t) - k),
+                    lambda i: F.concat_ws(" ", F.slice(t, i + 1, k))),
+    ).otherwise(F.array(F.concat_ws(" ", t)))
+
+
+def test_word_shingles_equals_resplit_spelling(spark):
+    from hive_parse_lineage_spark.functions.text import word_shingles
+    ks = range(1, 9)
+    docs = [None, "", "a", "a  b", "  a b c", "a b c  ", "  a  b  c  d  "]
+    docs += [" ".join(f"w{j}" for j in range(k)) for k in ks]
+    df = spark.createDataFrame(list(enumerate(docs)),
+                               "doc_id long, text string")
+    rows = df.select(
+        "doc_id",
+        *[word_shingles("text", k).alias(f"new{k}") for k in ks],
+        *[_word_shingles_resplit("text", k).alias(f"ref{k}") for k in ks],
+    ).collect()
+    assert len(rows) == len(docs)
+    for r in rows:
+        for k in ks:
+            assert r[f"new{k}"] == r[f"ref{k}"], (docs[r["doc_id"]], k)
+    analyzed = (df.select(word_shingles("text", 3).alias("sh"))
+                ._jdf.queryExecution().analyzed().toString())
+    assert analyzed.count("split(") == 1, analyzed
