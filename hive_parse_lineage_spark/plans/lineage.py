@@ -36,6 +36,7 @@ sources (reference ``subQueryMap``, ``LineParser.java:369-383,534-549``).
 from __future__ import annotations
 
 import json
+import logging
 import re
 import threading
 import weakref
@@ -43,7 +44,11 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
+from py4j.java_gateway import JavaObject
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # data model (ColLine: entity/ColLine.java:12-31)
@@ -247,10 +252,19 @@ def _code_only(stmt: str) -> str:
     return "".join(out)
 
 
+_UNIQUEJOIN = re.compile(r"\bUNIQUEJOIN\b", re.IGNORECASE)
+
+
 def check_supported_syntax(stmt: str) -> None:
     """Raise the documented diagnostic for Hive-only syntax this
     engine deliberately does not implement (currently: UNIQUEJOIN)."""
-    if re.search(r"\bUNIQUEJOIN\b", _code_only(stmt), re.IGNORECASE):
+    _check_supported_code(_code_only(stmt))
+
+
+def _check_supported_code(code: str) -> None:
+    """check_supported_syntax on a statement already blanked by
+    _code_only."""
+    if _UNIQUEJOIN.search(code):
         raise UniqueJoinUnsupportedError(_UNIQUEJOIN_MSG)
 
 
@@ -269,13 +283,8 @@ def _opt(o):
 
 
 def _cls(node) -> str:
-    try:
-        # TreeNode.nodeName: one py4j round trip (vs two for
-        # getClass().getSimpleName()) — _cls runs hundreds of times per
-        # statement, so this halves the walk's JVM chatter.
-        return str(node.nodeName())
-    except Exception:
-        return node.getClass().getSimpleName().rstrip("$")
+    """TreeNode.nodeName: one py4j round trip."""
+    return node.nodeName()
 
 
 class _JvmHandles(NamedTuple):
@@ -284,8 +293,10 @@ class _JvmHandles(NamedTuple):
     round trip of its own."""
     parser: object
     analyzer: object
-    json_mapper: object    # the json4s Jackson mapper TreeNode.toJSON uses
-    string_writer: object  # java.io.StringWriter (the class)
+    catalog: object        # the SessionCatalog
+    scala_json: object     # a Jackson mapper that knows Scala collections
+    tuple3: object         # scala.Tuple3 (the class)
+    nil: object            # scala.collection.immutable.Nil
 
 
 _JVM_HANDLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
@@ -296,12 +307,45 @@ def _jvm_handles(spark: SparkSession) -> _JvmHandles:
     if handles is None:
         state = spark._jsparkSession.sessionState()
         jvm = spark.sparkContext._jvm
+        scala_json = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+        scala_json.registerModule(getattr(getattr(
+            jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$"),
+            "MODULE$"))
         handles = _JVM_HANDLES[spark] = _JvmHandles(
-            state.sqlParser(), state.analyzer(),
-            getattr(getattr(jvm.org.json4s.jackson, "JsonMethods$"),
-                    "MODULE$").mapper(),
-            jvm.java.io.StringWriter)
+            state.sqlParser(), state.analyzer(), state.catalog(),
+            scala_json, jvm.scala.Tuple3,
+            getattr(getattr(jvm.scala.collection.immutable, "Nil$"),
+                    "MODULE$"))
     return handles
+
+
+_NODELAY_MARK = "_lineage_tcp_nodelay"
+_nodelay_warned = False
+
+
+def _reply_without_nagle(spark: SparkSession) -> None:
+    """Set TCP_NODELAY on the JVM end of this thread's py4j connection,
+    once per connection (see the JSON-walk section comment).
+
+    Under ``PYSPARK_PIN_THREAD=false`` there is no per-thread
+    connection to mark: warn once, and replies over 8 KiB keep their
+    ~44 ms stall."""
+    global _nodelay_warned
+    client = spark.sparkContext._gateway._gateway_client
+    thread_connection = getattr(client, "get_thread_connection", None)
+    if thread_connection is None:
+        if not _nodelay_warned:
+            _nodelay_warned = True
+            _log.warning("py4j runs without per-thread connections "
+                         "(PYSPARK_PIN_THREAD=false): plan JSON replies "
+                         "over 8 KiB stall ~44 ms each")
+        return
+    conn = thread_connection()
+    if conn is not None and getattr(conn, _NODELAY_MARK, False):
+        return
+    (JavaObject("GATEWAY_SERVER", client).getCallbackClient()
+     .getPerThreadConnection().getSocket().setTcpNoDelay(True))
+    setattr(thread_connection(), _NODELAY_MARK, True)
 
 
 # join-type labels: token text minus "TOK_" (LineParser.java:448-454)
@@ -339,13 +383,17 @@ _PASSTHROUGH = {
 class _Walker:
     """One instance per statement; not thread-safe (plan-sized state only)."""
 
-    def __init__(self, spark: SparkSession, traverse_views: bool = False):
+    def __init__(self, spark: SparkSession, traverse_views: bool = False,
+                 current_db: str | None = None):
         #: False (reference parity): a view is a table boundary.
         #: True: expand view bodies and trace through to base tables.
         self.traverse_views = traverse_views
         jvm = _jvm_handles(spark)
         self.parser = jvm.parser
         self.analyzer = jvm.analyzer
+        #: the session's database (read here unless the caller has)
+        self.current_db = (spark.catalog.currentDatabase()
+                           if current_db is None else current_db)
         self.input_tables: set[str] = set()
         self.cte_defs: dict[int, dict[int, tuple[set[str], set[str]]]] = {}
         #: per-attribute conditions sealed at query-context boundaries
@@ -359,12 +407,6 @@ class _Walker:
         self._file_scans: dict[int, str] | None = None
         #: > 0 while a view body is being walked (traverse_views)
         self._view_depth = 0
-        self.current_db = DEFAULT_DB
-        try:
-            cur = spark.catalog.currentDatabase
-            self.current_db = cur() if callable(cur) else cur
-        except Exception:
-            pass
 
     # -- naming ---------------------------------------------------------
     def fill_db(self, name: str) -> str:
@@ -783,45 +825,20 @@ class _Walker:
 # _JsonWalkError rather than switching to a renderer with different
 # output.
 #
-# The text is NOT fetched with one ``plan.toJSON()`` call. py4j's Java
-# side writes each reply through 8 KiB buffers (8,192 chars, then 8,192
-# UTF-8 bytes) on a socket without TCP_NODELAY: a reply that overflows
-# them goes out as two writes, and Nagle holds the second until the
-# Python side's delayed ACK, a flat ~44 ms per reply (8,180 ASCII chars:
-# 0.3 ms; 8,200: 44 ms). The served workload's plans are mostly
-# 9-15 kB, so a whole-text reply cost ~40 ms of a ~57 ms statement.
-# _plan_json_slices instead writes the JSON into a JVM-side StringWriter
-# with the mapper toJSON itself uses and reads it back in slices that
-# each fit in one write: the same text byte for byte, in ~7 ms
-# instead of ~42 ms on a 12 kB plan.
+# The text comes back in one ``plan.toJSON()`` reply. py4j's Java side
+# writes a reply through 8 KiB buffers (8,192 chars, then 8,192 UTF-8
+# bytes), so a reply that overflows them leaves as two writes; with
+# Nagle on, the second waits for the Python side's delayed ACK, a flat
+# ~44 ms (8,180 ASCII chars: 0.3 ms; 8,200: 44 ms), and the served
+# workload's plans are mostly 9-15 kB. _reply_without_nagle turns Nagle
+# off on the JVM end of each py4j connection, once per connection, so
+# a 12 kB plan's reply takes ~1.2 ms instead of ~42 ms.
 # ---------------------------------------------------------------------------
 
-#: UTF-16 units per slice read back by _plan_json_slices. A unit costs
-#: at most 3 UTF-8 bytes once py4j escapes it (BMP text 3; an escaped
-#: backslash or newline 2; a surrogate pair 4 for 2 units), so a slice
-#: stays under py4j's 8,192-byte buffer whatever literals the plan holds.
-_JSON_SLICE = 2_700
-
-
-def _plan_json_slices(spark: SparkSession, plan) -> list[str]:
-    """``plan.toJSON()``'s text as slices of ≤ _JSON_SLICE UTF-16 units,
-    cut on code-point boundaries (see the section comment)."""
-    jvm = _jvm_handles(spark)
-    sw = jvm.string_writer()
-    jvm.json_mapper.writeValue(sw, plan.jsonValue())
-    buf = sw.getBuffer()
-    n = buf.length()
-    slices, a = [], 0
-    while a < n:
-        b = min(a + _JSON_SLICE, n)
-        s = buf.substring(a, b)
-        # a cut inside a surrogate pair comes back as "?": cut before it
-        if b < n and s.endswith("?") and buf.codePointAt(b - 1) > 0xFFFF:
-            b -= 1
-            s = s[:-1]
-        slices.append(s)
-        a = b
-    return slices
+def _plan_json(spark: SparkSession, plan) -> dict:
+    """The analyzed plan's tree, read in one JVM reply."""
+    _reply_without_nagle(spark)
+    return _decode_flat(json.loads(plan.toJSON()))
 
 
 def _decode_flat(flat: list) -> dict:
@@ -1070,11 +1087,8 @@ def _ident_from_unresolved(node) -> str | None:
     for acc in ("multipartIdentifier", "nameParts", "identifier", "name"):
         try:
             v = getattr(node, acc)()
-            if hasattr(v, "size"):
-                return ".".join(str(v.apply(i)) for i in range(v.size()))
-            if hasattr(v, "toString"):
-                return v.toString()
-            return str(v)
+            # a Seq of name parts (a JVM String arrives as a str)
+            return v.mkString(".") if isinstance(v, JavaObject) else str(v)
         except Exception:
             continue
     return None
@@ -1131,8 +1145,12 @@ def _dml_where(w: _Walker, parsed) -> list[str]:
 
 
 def _statement_lineage(spark: SparkSession, sql: str,
-                       traverse_views: bool = False) -> StatementLineage:
-    w = _Walker(spark, traverse_views)
+                       traverse_views: bool = False,
+                       current_db: str | None = None) -> StatementLineage:
+    """Lineage of one statement. ``current_db`` is the session's
+    database, read here when the caller has not read it already."""
+    w = _Walker(spark, traverse_views, current_db)
+    current_db = w.current_db
     parsed = w.parse(sql)
     cls = _cls(parsed)
 
@@ -1229,28 +1247,17 @@ def _statement_lineage(spark: SparkSession, sql: str,
         # WITH ... INSERT INTO t SELECT ... (also the multi-insert
         # variant): the CTE scope must stay wrapped around the insert's
         # query for the analyzer to resolve it, so rebuild the
-        # UnresolvedWith with the query subtree in the insert's place.
-        kids = parsed.children()
-        nodes = [kids.apply(i) for i in range(kids.size())]
-        inserts = []
-        for i, nd in enumerate(nodes):
-            if _cls(nd) == "InsertIntoStatement":
-                inserts.append((i, [nd]))
-            elif _cls(nd) == "Union":
-                uk = nd.children()
-                branches = [uk.apply(j) for j in range(uk.size())]
-                if branches and all(_cls(b) == "InsertIntoStatement"
-                                    for b in branches):
-                    inserts.append((i, branches))
-        if inserts:
-            results = []
-            for i, branches in inserts:
-                for b in branches:
-                    scoped = _with_child_replaced(spark, parsed, nodes, i,
-                                                  b.query())
-                    results.append(_insert_node_lineage(
-                        spark, sql, b, _Walker(spark, traverse_views),
-                        query_plan=scoped))
+        # UnresolvedWith with the insert's query as its child.
+        child = parsed.child()
+        kind = _cls(child)
+        branches = ([child] if kind == "InsertIntoStatement"
+                    else _insert_branches(child) if kind == "Union" else None)
+        if branches:
+            results = [
+                _insert_node_lineage(
+                    spark, sql, b, _Walker(spark, traverse_views, current_db),
+                    query_plan=_with_child(spark, parsed, b.query()))
+                for b in branches]
             if len(results) == 1:
                 return results[0]
             return StatementLineage(
@@ -1265,19 +1272,18 @@ def _statement_lineage(spark: SparkSession, sql: str,
         # (reference: one TOK_QUERY with several TOK_INSERT children,
         # LineParser.java:200-214). Trace each branch with a fresh
         # walker and merge the edges into one statement result.
-        kids = parsed.children()
-        nodes = [kids.apply(i) for i in range(kids.size())]
-        if nodes and all(_cls(n) == "InsertIntoStatement" for n in nodes):
-            branches = [
+        branches = _insert_branches(parsed)
+        if branches:
+            results = [
                 _insert_node_lineage(spark, sql, n,
-                                     _Walker(spark, traverse_views))
-                for n in nodes
+                                     _Walker(spark, traverse_views, current_db))
+                for n in branches
             ]
             return StatementLineage(
                 sql, "INSERT",
-                [e for b in branches for e in b.col_lines],
-                set().union(*(b.input_tables for b in branches)),
-                set().union(*(b.output_tables for b in branches)))
+                [e for b in results for e in b.col_lines],
+                set().union(*(b.input_tables for b in results)),
+                set().union(*(b.output_tables for b in results)))
 
     if cls == "MergeIntoTable":
         # MERGE INTO t USING s ON ...: upsert classification — target is
@@ -1333,16 +1339,21 @@ def _statement_lineage(spark: SparkSession, sql: str,
     return _query_lineage(spark, w, sql, parsed, "SELECT", None)
 
 
-def _with_child_replaced(spark: SparkSession, parent, nodes: list,
-                         idx: int, replacement):
-    """Rebuild ``parent`` with ``nodes[idx]`` swapped for ``replacement``
-    (TreeNode.withNewChildren via a Scala Seq)."""
-    jvm = spark.sparkContext._jvm
-    arr = jvm.java.util.ArrayList()
-    for i, nd in enumerate(nodes):
-        arr.add(replacement if i == idx else nd)
-    seq = jvm.scala.jdk.javaapi.CollectionConverters.asScala(arr).toSeq()
-    return parent.withNewChildren(seq)
+def _insert_branches(union) -> list | None:
+    """The branches of a parsed Union that is a Hive multi-insert (every
+    branch an InsertIntoStatement), else None. Node 1 in pre-order is
+    the first branch: a query's Union is told apart by that one probe."""
+    if _cls(union.apply(1)) != "InsertIntoStatement":
+        return None
+    nodes = _seq(union.children())
+    return (nodes if all(_cls(n) == "InsertIntoStatement" for n in nodes[1:])
+            else None)
+
+
+def _with_child(spark: SparkSession, parent, child):
+    """The unary node ``parent`` rebuilt over ``child``."""
+    nil = _jvm_handles(spark).nil
+    return parent.withNewChildren(getattr(nil, "$colon$colon")(child))
 
 
 def _insert_node_lineage(spark: SparkSession, sql: str, node,
@@ -1350,46 +1361,28 @@ def _insert_node_lineage(spark: SparkSession, sql: str, node,
     """Lineage of one InsertIntoStatement node (a standalone INSERT, one
     branch of a multi-insert, or — with ``query_plan`` — an insert whose
     query must stay wrapped in its enclosing CTE scope)."""
-    target = _ident_from_unresolved(node.table())
+    jvm = _jvm_handles(spark)
+    spec = node.partitionSpec()
+    # target name parts, the user column list and the PARTITION spec
+    # ({column: static value or null}) in one reply
+    parts, user_cols, values = json.loads(jvm.scala_json.writeValueAsString(
+        jvm.tuple3(node.table().multipartIdentifier(),
+                   node.userSpecifiedCols(), spec)))
     query = query_plan if query_plan is not None else node.query()
     # INSERT INTO t (b, a) ...: the user column list overrides the
     # catalog's positional order (reference only knows positional,
-    # LineParser.java:143-152; by-name is the Spark-era extension)
-    user_cols = None
-    try:
-        uc = node.userSpecifiedCols()
-        if uc.size() > 0:
-            user_cols = [str(uc.apply(i)) for i in range(uc.size())]
-    except Exception:
-        pass
-    return _query_lineage(spark, w, sql, query, "INSERT",
-                          w.fill_db(target) if target else None,
-                          user_cols=user_cols, by_name=bool(node.byName()),
-                          dynamic_parts=_dynamic_partitions(node))
-
-
-def _dynamic_partitions(node) -> set[str] | None:
-    """Names of the DYNAMIC partition columns in an INSERT's PARTITION
-    spec.
-
-    ``PARTITION (p1='a', p2)`` -> {'p2'}: only p2's value comes from a
-    trailing select expression; the static p1 consumes nothing. Returns
-    None when there is no PARTITION clause at all — Hive then treats
-    every partition column as dynamic (they all trail the select).
-    """
-    try:
-        spec = node.partitionSpec()
-        if spec.isEmpty():
-            return None
-        dyn: set[str] = set()
-        it = spec.iterator()
-        while it.hasNext():
-            kv = it.next()
-            if kv._2().isEmpty():
-                dyn.add(str(kv._1()).lower())
-        return dyn
-    except Exception:
-        return None
+    # LineParser.java:143-152; by-name is the Spark-era extension).
+    # PARTITION (p1='a', p2): only the DYNAMIC p2 takes a trailing
+    # select expression; without a PARTITION clause Hive treats every
+    # partition column as dynamic (None). A static NULL value
+    # (p1=NULL, Some(null)) also reads null in JSON, so a null is
+    # confirmed as None on the JVM.
+    return _query_lineage(
+        spark, w, sql, query, "INSERT", w.fill_db(".".join(parts)),
+        user_cols=user_cols or None, by_name=node.byName(),
+        dynamic_parts=({k.lower() for k, v in values.items()
+                        if v is None and spec.apply(k).isEmpty()}
+                       if values else None))
 
 
 def _query_lineage(spark: SparkSession, w: _Walker, sql: str, parsed_query,
@@ -1400,8 +1393,7 @@ def _query_lineage(spark: SparkSession, w: _Walker, sql: str, parsed_query,
     if parsed_query is None:
         return StatementLineage(sql, operation, [], set(),
                                 {target_table} if target_table else set())
-    tree = _decode_flat(json.loads(
-        "".join(_plan_json_slices(spark, w.analyze(parsed_query)))))
+    tree = _plan_json(spark, w.analyze(parsed_query))
     mapping, conds = w.walk_json(tree)
     edges = w.project_edges_json(tree, mapping, conds)
 
@@ -1425,20 +1417,22 @@ def _query_lineage(spark: SparkSession, w: _Walker, sql: str, parsed_query,
 
 def _catalog_columns(spark: SparkSession, table: str,
                      dynamic_parts: set[str] | None = None) -> list[str] | None:
+    """The target columns select expressions bind to, in order; None
+    when the target is not in the catalog (its aliases stand)."""
     try:
         data, parts = _table_schema(spark, table)
-        # Dynamic-partition inserts put their DYNAMIC partition columns
-        # LAST in the select list (Hive semantics); appending only those
-        # binds the trailing expressions. Static partition columns
-        # (PARTITION (p1='a', ...)) consume no select expression and
-        # must not appear, or a mixed static/dynamic spec would bind the
-        # trailing expression to the wrong column. dynamic_parts=None
-        # means no PARTITION clause -> all partition columns dynamic.
-        if dynamic_parts is not None:
-            parts = [p for p in parts if p.lower() in dynamic_parts]
-        return (data + parts) or None
-    except Exception:
+    except AnalysisException:
         return None
+    # Dynamic-partition inserts put their DYNAMIC partition columns
+    # LAST in the select list (Hive semantics); appending only those
+    # binds the trailing expressions. Static partition columns
+    # (PARTITION (p1='a', ...)) consume no select expression and
+    # must not appear, or a mixed static/dynamic spec would bind the
+    # trailing expression to the wrong column. dynamic_parts=None
+    # means no PARTITION clause -> all partition columns dynamic.
+    if dynamic_parts is not None:
+        parts = [p for p in parts if p.lower() in dynamic_parts]
+    return (data + parts) or None
 
 
 def _table_schema(spark: SparkSession, table: str) -> tuple[list[str], list[str]]:
@@ -1451,17 +1445,14 @@ def _table_schema(spark: SparkSession, table: str) -> tuple[list[str], list[str]
     measured): this runs once per INSERT statement and dominated
     lineage throughput.
     """
-    jvm = spark.sparkContext._jvm
-    name_parts = table.split(".")
-    tbl = name_parts[-1]
-    db = name_parts[-2] if len(name_parts) > 1 else None
-    ti = jvm.org.apache.spark.sql.catalyst.TableIdentifier(
-        tbl, jvm.scala.Option.apply(db))
-    meta = (spark._jsparkSession.sessionState().catalog()
-            .getTempViewOrPermanentTableMetadata(ti))
+    jvm = _jvm_handles(spark)
+    ident = ".".join("`%s`" % p.replace("`", "``")
+                     for p in table.split(".")[-2:])
+    meta = jvm.catalog.getTempViewOrPermanentTableMetadata(
+        jvm.parser.parseTableIdentifier(ident))
     fields = [f["name"] for f in json.loads(meta.schema().json())["fields"]]
-    pseq = meta.partitionColumnNames()
-    parts = [str(pseq.apply(i)) for i in range(pseq.size())]
+    parts = json.loads(jvm.scala_json.writeValueAsString(
+        meta.partitionColumnNames()))
     part_set = set(parts)
     return [f for f in fields if f not in part_set], parts
 
@@ -1533,15 +1524,20 @@ def extract_lineage(spark: SparkSession, sql_text: str,
     concurrently.
     """
     stmts = split_statements(sql_text)
-    uses_db = any(_USE.search(_code_only(s)) for s in stmts)
+    codes = [_code_only(s) for s in stmts]
+    uses_db = any(_USE.search(c) for c in codes)
     script = ScriptLineage()
     with _SESSION_GATE.exclusive() if uses_db else _SESSION_GATE.shared():
-        start_db = spark.catalog.currentDatabase() if uses_db else None
+        # read once per script, and again after a statement that may
+        # have switched it (such scripts run alone behind the gate)
+        start_db = db = spark.catalog.currentDatabase()
         try:
-            for stmt in stmts:
-                check_supported_syntax(stmt)
+            for stmt, code in zip(stmts, codes):
+                _check_supported_code(code)
                 script.statements.append(
-                    _statement_lineage(spark, stmt, traverse_views))
+                    _statement_lineage(spark, stmt, traverse_views, db))
+                if _USE.search(code):
+                    db = spark.catalog.currentDatabase()
         finally:
             if uses_db:
                 spark.catalog.setCurrentDatabase(start_db)

@@ -17,7 +17,10 @@ Unlike the reference (which hard-codes its datasource config at
 ParseController.java:20-24), the engine is injected. Lineage is
 plan-sized work on the driver (parse + analyze, no Spark jobs), so a
 single SparkSession serves all requests, and requests run concurrently
-on it, one thread each. ``extract_lineage`` is what makes that safe:
+on it on a fixed pool of ``WORKERS`` threads. A worker keeps its py4j
+connection (and the JVM thread serving it) from one request to the
+next, and with it the connection's TCP_NODELAY flag, so a request pays
+for neither. ``extract_lineage`` is what makes concurrency safe:
 ``USE``, the only session state lineage changes, is scoped to its
 script, which runs alone.
 
@@ -32,8 +35,11 @@ from __future__ import annotations
 
 import json
 import logging
+import os
+import socket
 import uuid
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from concurrent.futures import ThreadPoolExecutor
+from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.errors import AnalysisException
@@ -43,10 +49,42 @@ from hive_parse_lineage_spark.plans.lineage import UniqueJoinUnsupportedError
 #: largest accepted request body (a SQL script), in bytes
 MAX_BODY_BYTES = 1 << 20
 
+#: request worker threads (ThreadPoolExecutor's own default size)
+WORKERS = min(32, (os.cpu_count() or 1) + 4)
+
 _log = logging.getLogger(__name__)
 
 
-def make_server(engine, host: str = "127.0.0.1", port: int = 0) -> ThreadingHTTPServer:
+class _PooledHTTPServer(HTTPServer):
+    """An HTTPServer that handles each request on one of ``WORKERS``
+    threads named ``hpl-http_N``; ``server_close`` joins them."""
+
+    #: listen backlog: accepted connections wait in the pool's queue,
+    #: but a burst of connects can outrun the accept loop, and past the
+    #: stdlib's backlog of 5 the kernel resets them
+    request_queue_size = socket.SOMAXCONN
+
+    def __init__(self, address, handler):
+        super().__init__(address, handler)
+        self._pool = ThreadPoolExecutor(WORKERS, thread_name_prefix="hpl-http")
+
+    def process_request(self, request, client_address):
+        self._pool.submit(self._handle, request, client_address)
+
+    def _handle(self, request, client_address):
+        try:
+            self.finish_request(request, client_address)
+        except Exception:
+            self.handle_error(request, client_address)
+        finally:
+            self.shutdown_request(request)
+
+    def server_close(self):
+        super().server_close()
+        self._pool.shutdown(wait=True)
+
+
+def make_server(engine, host: str = "127.0.0.1", port: int = 0) -> HTTPServer:
     """Build (not start) an HTTP server bound to ``engine``. Port 0
     picks a free port; ``server.server_address`` has the real one."""
 
@@ -118,7 +156,7 @@ def make_server(engine, host: str = "127.0.0.1", port: int = 0) -> ThreadingHTTP
         def log_message(self, *a):  # keep test output quiet
             pass
 
-    return ThreadingHTTPServer((host, port), Handler)
+    return _PooledHTTPServer((host, port), Handler)
 
 
 def serve(engine, host: str = "127.0.0.1", port: int = 8080) -> None:

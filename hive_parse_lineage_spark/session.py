@@ -10,9 +10,12 @@ paths.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # Runtime SQL confs the engine depends on. Applied both at build time and
 # defensively at run time (``configure``) because the driver's verify
@@ -80,6 +83,7 @@ def configure(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - non-settable conf on some build
-            pass
+        except Exception:  # a conf this build will not set at run time
+            _log.warning("configure: could not set %s=%s", k, v,
+                         exc_info=True)
     return spark

@@ -6,6 +6,10 @@ cited per test). Catalog tables are created in a temp warehouse.
 
 from __future__ import annotations
 
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 from pyspark.errors import AnalysisException
 
@@ -62,42 +66,113 @@ def test_use_is_scoped_to_its_script(spark, lineage_tables):
     assert spark.catalog.currentDatabase() == "default"
 
 
-def test_plan_json_slices_match_tojson(spark):
-    """The sliced plan-JSON fetch returns toJSON's text byte for byte on
-    a plan over 8 KiB whose literal holds emoji, CJK, backslashes and
-    newlines, with the first slice boundary inside a surrogate pair;
-    every slice fits py4j's 8 KiB reply buffer once escaped."""
-    from hive_parse_lineage_spark.plans.lineage import (
-        _JSON_SLICE, _plan_json_slices)
+def test_plan_json_reply_is_not_stalled(spark):
+    """A new thread (so a new py4j connection) traces a statement whose
+    analyzed plan JSON is over 8 KiB: the JVM end of its connection has
+    TCP_NODELAY, the literal (emoji, CJK, backslashes, newlines) comes
+    back intact in the COLFUN: condition, and a toJSON() reply on that
+    thread takes well under the ~44 ms a Nagle stall costs."""
+    from py4j.java_gateway import JavaObject
 
-    def analyzed(pad: int):
-        lit = ("a" * pad + "\U0001F600" * 2000 + "\\\n" * 1500
-               + "\u4e2d" * 2000)
-        return spark.sql("SELECT '%s' AS s" % lit.replace("\\", "\\\\")
-                         )._jdf.queryExecution().analyzed()
+    from hive_parse_lineage_spark.plans.lineage import extract_lineage
 
-    def utf16(s: str) -> bytes:
-        return s.encode("utf-16-le")
+    lit = "\U0001F600" * 2000 + "\\\n" * 1500 + "\u4e2d" * 2000
+    sql = "SELECT '%s' AS s" % lit.replace("\\", "\\\\")
 
-    plan = analyzed(0)
-    text = plan.toJSON()
-    emoji_at = len(utf16(text[:text.index("\U0001F600")])) // 2
-    if (_JSON_SLICE - emoji_at) % 2 == 0:  # cut falls between two pairs
-        plan = analyzed(1)
-        text = plan.toJSON()
-    cut_unit = int.from_bytes(
-        utf16(text)[2 * _JSON_SLICE - 2:2 * _JSON_SLICE], "little")
-    assert 0xD800 <= cut_unit <= 0xDBFF  # a naive cut splits a pair
-    assert len(text.encode()) > 8192
+    def on_new_connection():
+        lin = extract_lineage(spark, sql)
+        client = spark.sparkContext._gateway._gateway_client
+        nodelay = (JavaObject("GATEWAY_SERVER", client).getCallbackClient()
+                   .getPerThreadConnection().getSocket().getTcpNoDelay())
+        plan = spark.sql(sql)._jdf.queryExecution().analyzed()
+        size = len(plan.toJSON().encode())
+        best = float("inf")
+        for _ in range(5):
+            t0 = time.perf_counter()
+            plan.toJSON()
+            best = min(best, time.perf_counter() - t0)
+        return lin, nodelay, size, best
 
-    slices = _plan_json_slices(spark, plan)
-    assert "".join(slices) == text
-    assert len(slices) > 2
-    for s in slices:
-        escaped = (s.replace("\\", "\\\\").replace("\n", "\\n")
-                   .replace("\r", "\\r"))
-        assert len(utf16(s)) // 2 <= _JSON_SLICE
-        assert len(escaped.encode()) < 8192
+    with ThreadPoolExecutor(1) as pool:
+        lin, nodelay, size, best = pool.submit(on_new_connection).result(
+            timeout=300)
+    assert size > 8192
+    assert nodelay
+    assert lin.col_lines[0]["conditions"] == ["COLFUN:'%s'" % lit]
+    assert best < 0.015, f"toJSON best of 5: {best * 1000:.1f} ms"
+
+
+@pytest.fixture(scope="module")
+def budget_targets(spark, tables):
+    spark.sql("CREATE TABLE IF NOT EXISTS default.budget_rev "
+              "(c_custkey BIGINT, c_name STRING, revenue DOUBLE) USING parquet")
+    spark.sql("CREATE TABLE IF NOT EXISTS default.budget_facts "
+              "(o_orderkey BIGINT, amount DOUBLE, priority STRING, ds STRING) "
+              "USING parquet PARTITIONED BY (ds)")
+    yield
+    spark.sql("DROP TABLE IF EXISTS default.budget_rev")
+    spark.sql("DROP TABLE IF EXISTS default.budget_facts")
+
+
+#: (one-statement script, most py4j round trips its lineage may make)
+_CALL_BUDGET = {
+    "join": ("SELECT c.c_name, n.n_name, o.o_totalprice FROM customer c "
+             "JOIN orders o ON c.c_custkey = o.o_custkey "
+             "JOIN nation n ON c.c_nationkey = n.n_nationkey "
+             "WHERE o.o_orderstatus = 'F' AND c.c_acctbal > 100", 6),
+    "aggregate": ("SELECT l_returnflag, SUM(l_extendedprice) AS revenue "
+                  "FROM lineitem WHERE l_quantity > 10 GROUP BY l_returnflag "
+                  "HAVING COUNT(*) > 1", 6),
+    "window": ("SELECT o_orderkey, ROW_NUMBER() OVER (PARTITION BY o_custkey "
+               "ORDER BY o_totalprice DESC) AS rn FROM orders", 6),
+    "in_subquery": ("SELECT p_name FROM part WHERE p_partkey IN "
+                    "(SELECT l_partkey FROM lineitem WHERE l_quantity > 5)", 6),
+    "star": ("SELECT * FROM supplier WHERE s_acctbal > 100", 6),
+    "cte": ("WITH spend AS (SELECT o_custkey, SUM(o_totalprice) AS total "
+            "FROM orders GROUP BY o_custkey) SELECT c.c_name, s.total "
+            "FROM spend s JOIN customer c ON c.c_custkey = s.o_custkey", 9),
+    "union_all": ("SELECT c_name AS name FROM customer WHERE c_acctbal > 0 "
+                  "UNION ALL SELECT s_name FROM supplier", 9),
+    "insert_into": ("INSERT INTO budget_rev SELECT c.c_custkey, c.c_name, "
+                    "SUM(o.o_totalprice) FROM customer c JOIN orders o "
+                    "ON c.c_custkey = o.o_custkey GROUP BY c.c_custkey, "
+                    "c.c_name", 20),
+    "insert_static_partition": (
+        "INSERT OVERWRITE TABLE budget_facts PARTITION (ds='2024-01-02') "
+        "SELECT o_orderkey, o_totalprice * 1.1, o_orderpriority FROM orders",
+        25),
+    "insert_dynamic_partition": (
+        "INSERT OVERWRITE TABLE budget_facts PARTITION (ds) "
+        "SELECT o_orderkey, o_totalprice, o_orderpriority, "
+        "CAST(o_orderdate AS STRING) FROM orders", 25),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_CALL_BUDGET))
+def test_py4j_call_budget(spark, budget_targets, monkeypatch, shape):
+    """py4j round trips made on the calling thread by one warm
+    one-statement script, the script's database read included (object
+    deletes run on py4j's finalizer thread and are not counted): each
+    one costs the statement a JVM round trip."""
+    from py4j.clientserver import ClientServerConnection
+
+    from hive_parse_lineage_spark.plans.lineage import extract_lineage
+
+    sql, budget = _CALL_BUDGET[shape]
+    extract_lineage(spark, sql)  # handles, TCP_NODELAY flag
+    me, calls = threading.get_ident(), []
+    send = ClientServerConnection.send_command
+
+    def counted(conn, command):
+        if threading.get_ident() == me:
+            calls.append(command.split("\n", 1)[0])
+        return send(conn, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    lin = extract_lineage(spark, sql)
+    monkeypatch.undo()
+    assert lin.col_lines
+    assert len(calls) <= budget, calls
 
 
 # --- #5,#18,#19: the reference's own sample (LineParser.java:801-803) ---

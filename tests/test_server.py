@@ -8,6 +8,7 @@ import json
 import random
 import sys
 import threading
+import time
 import urllib.request
 from concurrent.futures import ThreadPoolExecutor
 from urllib.parse import urlsplit
@@ -15,7 +16,8 @@ from urllib.parse import urlsplit
 import pytest
 
 from hive_parse_lineage_spark.engine import Engine
-from hive_parse_lineage_spark.server import MAX_BODY_BYTES, make_server
+from hive_parse_lineage_spark.server import (
+    MAX_BODY_BYTES, WORKERS, make_server)
 
 
 def _serve(engine):
@@ -149,6 +151,26 @@ def test_engine_fault_is_500_with_error_id():
         srv.server_close()
 
 
+def test_catalog_fault_is_500_not_alias_binding(server_url, monkeypatch):
+    """A failure reading the INSERT target's columns that is not a
+    missing table is an engine fault: the select aliases must not be
+    served as the target's columns."""
+    from py4j.protocol import Py4JError
+
+    from hive_parse_lineage_spark.plans import lineage
+
+    def broken(spark, table):
+        raise Py4JError("catalog read failed")
+
+    monkeypatch.setattr(lineage, "_table_schema", broken)
+    status, body = _post(server_url + "/fetch",
+                         "INSERT INTO srv_target SELECT c_custkey AS k2, "
+                         "c_name AS n2 FROM customer")
+    assert status == 500
+    assert body["error"] == "InternalError"
+    assert len(body["error_id"]) == 12
+
+
 def test_body_needs_content_length(server_url):
     assert _raw(server_url + "/fetch")[0] == 411
 
@@ -231,3 +253,50 @@ def test_concurrent_soak_matches_serial(server_url, spark):
     for req, got in answers:
         assert got == serial[req], req
     assert spark.catalog.currentDatabase() == "default"
+
+
+def _pool_threads(exclude: set) -> list[threading.Thread]:
+    return [t for t in threading.enumerate()
+            if t.name.startswith("hpl-http") and t not in exclude]
+
+
+def test_worker_pool_bounds_threads(spark, tables):
+    """3x the pool size of concurrent /fetch requests all complete with
+    the serial answer, the server never runs more than WORKERS request
+    threads, and server_close() joins them."""
+    before = set(_pool_threads(set()))
+    srv = _serve(Engine(spark, register_tables=False))
+    host, port = srv.server_address
+    url = f"http://{host}:{port}/fetch"
+    bodies = [body for path, body, status in _SOAK
+              if path == "/fetch" and status == 200 and "USE" not in body]
+    serial = {body: _post(url, body) for body in bodies}
+    assert all(got[0] == 200 for got in serial.values())
+
+    peak, done = [0], threading.Event()
+
+    def sample():
+        while not done.is_set():
+            peak[0] = max(peak[0], len(_pool_threads(before)))
+            time.sleep(0.001)
+
+    sampler = threading.Thread(target=sample)
+    sampler.start()
+    n = 3 * WORKERS
+    try:
+        with ThreadPoolExecutor(n) as clients:
+            answers = list(clients.map(
+                lambda i: (bodies[i % len(bodies)],
+                           _post(url, bodies[i % len(bodies)])),
+                range(n), timeout=600))
+    finally:
+        done.set()
+        sampler.join(timeout=10)
+        srv.shutdown()
+        srv.server_close()
+    assert not sampler.is_alive()
+    assert len(answers) == n
+    for body, got in answers:
+        assert got == serial[body], body
+    assert 1 <= peak[0] <= WORKERS
+    assert _pool_threads(before) == []
