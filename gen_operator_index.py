@@ -58,23 +58,13 @@ def _latest(pattern: str) -> str | None:
 
 
 def _module_map() -> dict[str, str]:
-    from hive_parse_lineage_spark.analytics_queries import analytics_queries
-    from hive_parse_lineage_spark.audit_queries import audit_queries
-    from hive_parse_lineage_spark.corpus_queries import corpus_queries
-    from hive_parse_lineage_spark.extra_queries import extra_queries
-    from hive_parse_lineage_spark.pipeline_queries import pipeline_queries
-    from hive_parse_lineage_spark.queries import DECLARED_QUERIES
-    out: dict[str, str] = {}
-    for mod, names in (
-            ("queries", DECLARED_QUERIES),
-            ("extra_queries", extra_queries()),
-            ("corpus_queries", corpus_queries()),
-            ("pipeline_queries", pipeline_queries()),
-            ("analytics_queries", analytics_queries()),
-            ("audit_queries", audit_queries())):
-        for n in names:
-            out.setdefault(n, mod)
     import __spark_entry__ as entry
+    from hive_parse_lineage_spark.queries import DECLARED_QUERIES
+    out: dict[str, str] = dict.fromkeys(DECLARED_QUERIES, "queries")
+    for (mod, _, _), (queries_fn, _) in zip(entry._REGISTRY_MODULES,
+                                           entry._registry_modules()):
+        for n in queries_fn():
+            out.setdefault(n, mod)
     for n in entry._META_KEYS:
         out.setdefault(n, "__spark_entry__")
     return out

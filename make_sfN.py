@@ -20,7 +20,7 @@ point from the committed data with the work content scaled exactly
   is IDENTICAL to the base SF — aggregate work scales linearly, join
   selectivity doesn't drift;
 - documents copies i>0 rewrite each token with an ``_{i}`` suffix
-  (bench.py _synth_10x rationale: verbatim clones would give every doc
+  (verbatim clones would give every doc
   COPIES exact duplicates and blow the near-dup pair count
   quadratically — no real corpus grows that way);
 - embeddings keep their vectors (brute-force similarity work is

@@ -12,11 +12,20 @@ at-scale adjudication silently left the record. This test recomputes
 the ever-crossed union from the committed detail files, so adding a
 new detail file that crosses a new entry FAILS the suite until the
 entry is added to a coverage tuple.
+
+The last three tests check the rung table (bench.RUNGS), the CLI's
+exit on an unknown mode flag, and one rung run's record schema.
 """
 
 import glob
 import json
 import os
+import re
+import subprocess
+import sys
+import time
+
+import pyarrow.parquet as pq
 
 import bench
 
@@ -103,3 +112,85 @@ def test_over_2x_rows_are_adjudicated():
         f">2x sf1.0 rows with no committed adjudication: {bad} — "
         "run bench.py --floor-proof (falling ratio at sf10) or "
         "dissect into the fixed-cost section")
+
+
+def test_rung_table_resolves():
+    """Every RUNGS row's entries resolve to a registry entry or a bench
+    helper, its axis overrides name its own entries or probes, and
+    every rung CLI flag maps to exactly one row: one usage line, no
+    clash with the modes that keep their own runners, and each
+    committed SWEEP_*_r*.json (metric, tag) pair still has its row."""
+    pool = bench._corpus_query_map()
+    for mode, row in bench.RUNGS.items():
+        unknown = [n for n in row.entries
+                   if n not in pool and n not in bench._HELPERS]
+        assert not unknown, f"{mode}: unresolved entries {unknown}"
+        assert len(set(row.entries)) == len(row.entries), mode
+        assert set(row.axes) <= set(row.entries) | set(row.probes), mode
+    flags = [line.split()[0] for line in bench._usage().splitlines()
+             if line.strip().startswith("--")]
+    for mode in bench.RUNGS:
+        assert flags.count(f"--{mode}") == 1, mode
+    assert not set(bench._MODES) & {f"--{m}" for m in bench.RUNGS}
+    rows = {(r.metric, r.tag) for r in bench.RUNGS.values()}
+    for path in glob.glob(os.path.join(_REPO, "SWEEP*_r*.json")):
+        tag = re.match(r"(SWEEP\w*?)_r\d+\.json$",
+                       os.path.basename(path)).group(1)
+        with open(path) as fh:
+            metric = json.load(fh)["metric"]
+        assert (metric, tag) in rows, os.path.basename(path)
+
+
+def test_unknown_mode_exits_2():
+    """A typo'd mode flag prints the usage and exits 2 without
+    importing pyspark (so no JVM can start), instead of falling
+    through to the minutes-long default run."""
+    code = ("import runpy, sys\n"
+            "sys.argv = ['bench.py', '--graph-skw']\n"
+            "try:\n"
+            f"    runpy.run_path({os.path.join(_REPO, 'bench.py')!r},\n"
+            "                   run_name='__main__')\n"
+            "except SystemExit as ex:\n"
+            "    print('EXIT', ex.code, 'pyspark' in sys.modules)\n")
+    t0 = time.monotonic()
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, timeout=20, cwd=_REPO)
+    assert time.monotonic() - t0 < 20
+    assert proc.stdout.split() == ["EXIT", "2", "False"], proc.stderr
+    assert "--graph-skew" in proc.stderr and "--dump-plans" in proc.stderr
+
+
+def test_rung_runner_schema(spark, tmp_path, monkeypatch):
+    """The event-ladder row on sf0.001 -> sf0.01: per-rung scale values
+    (the events files' own row counts), per-entry rows_out, the shared
+    growth schema, the record on disk equal to the printed one, and
+    the row's env flag restored afterwards."""
+    dirs = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
+    path = tmp_path / "sweep.json"
+    monkeypatch.setenv("SPARK_GRAFT_LADDER_DIRS", ",".join(dirs))
+    monkeypatch.setenv("SWEEP_PATH", str(path))
+    monkeypatch.delenv("SF1_ONLY", raising=False)
+    monkeypatch.delenv("SPARK_GRAFT_APPROX_QUANTILES", raising=False)
+    bench._corpus_query_map()      # registry imports are not the runner's
+    t0 = time.monotonic()
+    out = bench.run_rungs(spark, "event-ladder")
+    assert time.monotonic() - t0 <= 30
+    assert "SPARK_GRAFT_APPROX_QUANTILES" not in os.environ
+    assert out["metric"] == "event_ladder"
+    assert out["detail_file"] == "sweep.json"
+    with open(path) as fh:
+        assert json.load(fh) == {k: v for k, v in out.items()
+                                 if k != "detail_file"}
+    assert [p["sf_dir"] for p in out["sweep"]] == ["sf0.001", "sf0.01"]
+    for point, d in zip(out["sweep"], dirs):
+        assert point["event_rows"] == pq.ParquetFile(
+            os.path.join(d, "events.parquet")).metadata.num_rows
+        assert {n: q["rows_out"] for n, q in point["queries"].items()} == {
+            "x187_watermark_lateness": 3, "x197_time_weighted_avg": 5}
+        assert all(q["wall"] > 0 for q in point["queries"].values())
+    growth = out["wall_growth_over_scale_growth"]
+    assert set(growth) == {"x187_watermark_lateness",
+                           "x197_time_weighted_avg"}
+    for g in growth.values():
+        assert g["axis"] == "event_rows"
+        assert len(g["ratios"]) == 1 and g["ratios"][0] > 0
