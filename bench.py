@@ -51,6 +51,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 from collections.abc import Callable
@@ -1262,12 +1263,31 @@ PLAN_ENTRIES = (
 )
 
 
+def normalize_plan_ids(text: str) -> str:
+    """Renumber expression ids (``#123``), exchange ids (``plan_id=45``)
+    and RDD ids (``MapPartitionsRDD[67]``) in order of first appearance,
+    and drop a checkpointed RDD's call site. The ids come from
+    JVM-global counters that any earlier job or AQE re-plan advances,
+    and the call site of an RDD made over py4j depends on the JVM's
+    reflection state, so two dumps of the same plan differ in them
+    alone."""
+    text = re.sub(r"(RDD\[\d+\] at \w+) at \S+:\d+", r"\1", text)
+    for pat, fmt in ((r"#(\d+)", "#{}"), (r"plan_id=(\d+)", "plan_id={}"),
+                     (r"RDD\[(\d+)\]", "RDD[{}]")):
+        ids: dict[str, int] = {}
+        text = re.sub(pat, lambda m: fmt.format(
+            ids.setdefault(m.group(1), len(ids) + 1)), text)
+    return text
+
+
 def dump_plans(outdir: str, suffix: str) -> None:
     """``bench.py --dump-plans OUTDIR SUFFIX``: ``.explain('formatted')``
     of the declared queries and PLAN_ENTRIES at SPARK_GRAFT_SF_DIR,
-    written to OUTDIR/<query>_<SUFFIX>.txt. The session, the declared
-    pass confs and the corpus partition reset are the bench's own, so
-    the plans show exactly what the bench executes."""
+    written to OUTDIR/<query>_<SUFFIX>.txt with ids normalized
+    (``normalize_plan_ids``), so repeated dumps of the same code are
+    byte-identical. The session, the declared pass confs and the corpus
+    partition reset are the bench's own, so the plans show exactly what
+    the bench executes."""
     import io
     from contextlib import redirect_stdout
 
@@ -1286,7 +1306,7 @@ def dump_plans(outdir: str, suffix: str) -> None:
         with redirect_stdout(buf):
             df.explain("formatted")
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as fh:
-            fh.write(buf.getvalue())
+            fh.write(normalize_plan_ids(buf.getvalue()))
 
     for name, sql in DECLARED_QUERIES.items():
         dump(name, spark.sql(sql))

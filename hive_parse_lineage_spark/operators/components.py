@@ -5,22 +5,31 @@ Pair emitters (MinHash-LSH, SimHash, exact-hash) produce *edges*;
 collapsing a corpus to one survivor per duplicate *group* needs the
 transitive closure. This implements min-label propagation:
 
-    label(v) <- min(label(v), min over neighbours u of label(u))
+    label(v) <- min over u in N(v) ∪ {v} of label(u)
 
 iterated to fixpoint (or a caller-fixed round count, for differential
 oracles that unroll the same rounds in SQL).
 
-Scale posture (100 TB): each round is one self-equi-join of the label
-table against the edge table plus a min-aggregate — both hash-shuffled
-on the vertex id, so successive rounds reuse the same partitioning
-(Exchange reuse; no resort). Near-dup graphs are unions of near-cliques,
+The closed neighbourhood N(v) ∪ {v} comes from a self-loop ``(v, v)``
+per vertex unioned into the adjacency, so a round is ONE join of the
+adjacency against the previous labels plus one ``min`` aggregate, and
+it references the previous labels exactly once: the plan of k rounds
+grows linearly and stays lazy. Round 1 needs no join at all (every
+label starts as the vertex id, so it is ``groupBy(v).min(u)``). The
+adjacency is checkpointed once — without that every round re-runs the
+pair emitter — and is then the only input each round scans, so AQE
+plans it once per round from its known size (broadcast when small).
+
+Scale posture (100 TB): each round is one equi-join plus a
+min-aggregate, both hash-shuffled on the vertex id when the adjacency
+is too big to broadcast. Near-dup graphs are unions of near-cliques,
 so the diameter — and hence the round count — is tiny (3-4 covers web
 corpora in practice; the alternating large-star/small-star variant of
 Kiveris et al. "Connected Components in MapReduce and Beyond" (SOCC'14)
-gives O(log n) worst-case rounds if ever needed). Labels are
-``localCheckpoint``-ed every round to truncate the iterative lineage —
-without it the plan doubles per round and the driver, not the data,
-becomes the bottleneck.
+gives O(log n) worst-case rounds if ever needed). The converged mode
+also checkpoints each round's labels, because it must count changed
+labels before it can plan the next round; the count reads the previous
+label off each vertex's self-loop row, so it needs no second join.
 """
 
 from __future__ import annotations
@@ -36,10 +45,17 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     the minimum vertex id reachable over ``edges``.
 
     edges: undirected pairs (each pair listed once is enough).
-    vertices: optional vertex universe; vertices without edges come out
-        as singleton components. Defaults to the ids present in edges.
-    max_iter: fixed round count (for oracle replay); None iterates to
-        convergence with a per-round changed-label count.
+    vertices: optional vertex universe, one row per distinct non-null
+        ``vertex``; vertices without edges come out as singleton
+        components. An edge with an endpoint outside it is dropped:
+        that endpoint is not labelled and passes no label on.
+        Defaults to the ids present in edges.
+    max_iter: fixed round count >= 1 (for oracle replay): the labels
+        are the min vertex id within ``max_iter`` hops, planned lazily
+        as one chain of rounds. None iterates to convergence with a
+        per-round changed-label count.
+    checkpoint: materialize the adjacency once (and, when converging,
+        each round's labels); False keeps everything lazy.
     """
     # Both directions in ONE pass over ``edges``: a union of the two
     # projections would plan (and, before the checkpoint, run) the
@@ -47,47 +63,59 @@ def connected_components(edges: DataFrame, vertices: DataFrame | None = None,
     adj = edges.select(F.inline(F.array(
         F.struct(F.col(src).alias("v"), F.col(dst).alias("u")),
         F.struct(F.col(dst).alias("v"), F.col(src).alias("u")))))
+    if vertices is None:
+        ids = adj.select("v").distinct()
+    else:
+        # the null filter the semi-joins infer anyway, spelled out so
+        # the self-loop side reads the same vertex scan (Exchange reuse)
+        ids = vertices.select(F.col("vertex").alias("v")).filter(
+            F.col("v").isNotNull())
+        # restrict both endpoints to the universe once, before the
+        # checkpoint, so no round has to
+        adj = (adj.join(ids, "v", "left_semi")
+               .join(ids.withColumnRenamed("v", "u"), "u", "left_semi"))
+    adj = adj.unionByName(ids.select("v", F.col("v").alias("u")))
     if checkpoint:
         # Materialize the adjacency once: it is referenced in every
         # round, and a lazy plan would recompute the (expensive) pair
         # emitter per round.
         adj = adj.localCheckpoint(eager=True)
-    if vertices is None:
-        vertices = adj.select(F.col("v").alias("vertex")).distinct()
-    labels = vertices.select("vertex", F.col("vertex").alias("component"))
 
-    def step(lab: DataFrame) -> DataFrame:
-        neigh = (adj.join(lab.withColumnRenamed("vertex", "u")
-                          .withColumnRenamed("component", "u_comp"), "u")
-                 .groupBy("v").agg(F.min("u_comp").alias("neigh_comp")))
-        return (lab.join(neigh.withColumnRenamed("v", "vertex"),
-                         "vertex", "left")
-                .select("vertex",
-                        F.least("component",
-                                F.coalesce("neigh_comp", "component"))
-                        .alias("component")))
-
+    labels = None
     if max_iter is not None:
-        for i in range(max_iter):
-            labels = step(labels)
-            if checkpoint and i < max_iter - 1:
-                # Truncate the iterative lineage: without this the plan
-                # doubles per round (each round references the previous
-                # label table twice).
-                labels = labels.localCheckpoint(eager=True)
+        if max_iter < 1:
+            raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+        for _ in range(max_iter):
+            labels = _round(adj, labels)
         return labels
 
     while True:
-        new = step(labels)
+        new = _round(adj, labels, with_prev=True)
         if checkpoint:
             new = new.localCheckpoint(eager=True)
-        changed = (new.alias("n")
-                   .join(labels.alias("o"), "vertex")
-                   .filter(F.col("n.component") != F.col("o.component"))
-                   .count())
-        labels = new
+        changed = new.filter(F.col("component") != F.col("prev")).count()
+        labels = new.drop("prev")
         if changed == 0:
             return labels
+
+
+def _round(adj: DataFrame, labels: DataFrame | None,
+           with_prev: bool = False) -> DataFrame:
+    """One round: each vertex takes the min label over its closed
+    neighbourhood (the self-loop rows of ``adj`` supply its own).
+    ``labels`` None is the starting labelling (label = vertex id).
+    ``with_prev`` adds the vertex's previous label, read off its
+    self-loop row, so a changed-label count needs no second join."""
+    if labels is None:
+        nb = adj.withColumn("c", F.col("u"))
+    else:
+        nb = adj.join(labels.select(F.col("vertex").alias("u"),
+                                    F.col("component").alias("c")), "u")
+    aggs = [F.min("c").alias("component")]
+    if with_prev:
+        aggs.append(F.min(F.when(F.col("u") == F.col("v"), F.col("c")))
+                    .alias("prev"))
+    return nb.groupBy(F.col("v").alias("vertex")).agg(*aggs)
 
 
 def dedup_survivors(docs: DataFrame, edges: DataFrame,

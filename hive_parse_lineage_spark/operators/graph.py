@@ -11,7 +11,7 @@ out-degree-annotated adjacency (both hash-partitioned on the source
 vertex), one map-side-combined SUM shuffle on the destination vertex,
 one left join back onto the vertex set. Nothing global, nothing
 driver-side; for deep iteration counts callers should localCheckpoint
-every few rounds exactly as connected_components does.
+every few rounds.
 """
 
 from __future__ import annotations

@@ -80,6 +80,51 @@ def test_connected_components_adjacency_reads_edges_once(spark):
             == {1: 1, 2: 1, 3: 2})
 
 
+def _edges_and_vertices(spark):
+    # the edges come out of a shuffle, like the pair emitters' do
+    edf = (spark.range(1, 40).groupBy((F.col("id") % 13).alias("g"))
+           .agg(F.min("id").alias("id_a"), F.max("id").alias("id_b"))
+           .select("id_a", "id_b"))
+    return edf, spark.range(1, 40).select(F.col("id").alias("vertex"))
+
+
+def test_bounded_components_plan_is_one_round_chain(spark):
+    """``max_iter`` rounds are ``max_iter`` min-aggregates over ONE
+    checkpointed adjacency: no per-round label checkpoint, and every
+    round scans the previous labels once, so the plan grows linearly."""
+    edf, vdf = _edges_and_vertices(spark)
+    labels = connected_components(edf, vertices=vdf, max_iter=4)
+    plan = labels._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    kinds = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+    rdds = {leaves.apply(i).rdd().id() for i in range(leaves.size())}
+    assert kinds == {"LogicalRDD"} and len(rdds) == 1, plan.toString()
+    aggs = [line for line in plan.toString().splitlines()
+            if "Aggregate [" in line and "min(" in line]
+    assert len(aggs) == 4, plan.toString()
+
+
+def test_bounded_components_build_runs_only_the_adjacency_checkpoint(spark):
+    """Building the bounded labels (as x46 does) runs the adjacency's
+    checkpoint jobs and nothing else: 4 rounds cost no more jobs at
+    build time than 1, and without the checkpoint the build runs none."""
+    sc = spark.sparkContext
+    edf, vdf = _edges_and_vertices(spark)
+
+    def build_jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            connected_components(edf, vertices=vdf, **kw).orderBy("vertex")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one = build_jobs("cc-build-1", max_iter=1)
+    assert one > 0
+    assert build_jobs("cc-build-4", max_iter=4) == one
+    assert build_jobs("cc-build-lazy", max_iter=4, checkpoint=False) == 0
+
+
 def test_dedup_survivors_keeps_min_per_cluster(spark):
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=f"t{i}") for i in range(6)])

@@ -7,6 +7,7 @@ from __future__ import annotations
 import random
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import Row
 
 from hive_parse_lineage_spark.operators.components import connected_components
@@ -26,6 +27,45 @@ def test_connected_components_random_graphs(spark, seed):
     got = {r["vertex"]: r["component"]
            for r in connected_components(edf, vertices=vdf).collect()}
     assert got == _union_find(edges, verts)
+
+
+def _min_within_hops(edges, verts, k):
+    """Min vertex id within ``k`` hops over the subgraph induced by
+    ``verts`` (an edge with an endpoint outside it does not exist)."""
+    nbrs = {v: {v} for v in verts}
+    for a, b in edges:
+        if a in nbrs and b in nbrs:
+            nbrs[a].add(b)
+            nbrs[b].add(a)
+    out = {}
+    for v in verts:
+        seen = {v}
+        for _ in range(k):
+            seen = set().union(*(nbrs[u] for u in seen))
+        out[v] = min(seen)
+    return out
+
+
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(verts=st.sets(st.integers(0, 11), min_size=1, max_size=10),
+       edges=st.lists(st.tuples(st.integers(0, 14), st.integers(0, 14)),
+                      max_size=14))
+# the diameter-4 chain, with an isolated vertex and an outside endpoint
+@example(verts={1, 2, 3, 4, 5, 9}, edges=[(5, 4), (4, 3), (3, 2), (2, 1),
+                                          (1, 13)])
+def test_bounded_components_are_min_within_k_hops(spark, verts, edges):
+    """``max_iter=k`` labels every vertex with the min vertex id within
+    k hops; vertices without edges keep their own id, and edges that
+    leave ``vertices`` neither get labelled nor pass a label."""
+    edf = spark.createDataFrame(edges, "id_a: long, id_b: long")
+    vdf = spark.createDataFrame([(v,) for v in sorted(verts)],
+                                "vertex: long")
+    for k in range(1, 5):
+        got = {r["vertex"]: r["component"]
+               for r in connected_components(edf, vertices=vdf,
+                                             max_iter=k).collect()}
+        assert got == _min_within_hops(edges, verts, k), k
 
 
 @pytest.mark.parametrize("seed", [3, 99])
